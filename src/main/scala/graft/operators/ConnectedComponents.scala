@@ -21,8 +21,9 @@ import org.apache.spark.util.LongAccumulator
   * Scale design (100 TB):
   *   - each round shuffles only the CURRENT edge set, keyed by node —
   *     no vertex-state table, no broadcast;
-  *   - `localCheckpoint` after every round truncates lineage (an iterative
-  *     plan otherwise re-executes all prior rounds on every action);
+  *   - the rounds run through [[Iterate]], whose `localCheckpoint` after
+  *     every round truncates lineage (an iterative plan otherwise
+  *     re-executes all prior rounds on every action);
   *   - convergence is the paper's CHANGE COUNT, carried by a
   *     LongAccumulator updated inside the round's own materialization:
   *     each star aggregation tags every emitted edge that differs from its
@@ -107,15 +108,12 @@ object ConnectedComponents {
     * includes the one confirming round that observes zero changes).
     */
   def componentsWithStats(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    var e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxIter) {
-      val changes = spark.sparkContext.longAccumulator(s"cc-changes-round-$rounds")
+    val changes = edges.sparkSession.sparkContext.longAccumulator("cc-changes")
+    // done ⇔ the round changed nothing ⇔ its output is a star forest
+    val cc = Iterate(
+        edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")).distinct(),
+        maxIter, _ => changes.value == 0L) { e =>
+      changes.reset()
       // NO per-round distinct: the next round's large-star symmetrizes and
       // collect_set-dedups its input anyway, so an inter-round distinct is
       // a third full shuffle per round that redoes work the next
@@ -131,23 +129,20 @@ object ConnectedComponents {
       // for that one round (it collapses at the next aggregation), which
       // trades bounded transient storage for a full shuffle per round.
       // Each round is exactly TWO shuffles: the large-star and small-star
-      // keyed aggregations.
-      val next = countChanges(smallStar(countChanges(largeStar(e), changes)), changes)
-        .localCheckpoint() // the ONE action of the round; counting rides along
-      rounds += 1
-      converged = changes.value == 0L // next ≡ e as a set ⇔ star forest
-      e = next
+      // keyed aggregations; the round's checkpoint is its ONE action, and
+      // the change counting rides along.
+      countChanges(smallStar(countChanges(largeStar(e), changes)), changes)
     }
-    require(converged, s"connected components did not converge in $maxIter rounds")
-    // e is now a star forest whose edges cover every input node (each
+    require(cc.done, s"connected components did not converge in $maxIter rounds")
+    // the state is now a star forest whose edges cover every input node (each
     // round preserves components, and every component has ≥2 nodes by
     // construction — self-loops were dropped): children map to their
     // center, centers to themselves. No join against a node table needed.
     // The one distinct deferred from the loop runs here, once.
-    val star = e.distinct()
+    val star = cc.state.distinct()
     val mapping = star.select(col("src").as("id"), col("dst").as("component"))
       .union(star.select(col("dst").as("id"), col("dst").as("component")).distinct())
-    (mapping, rounds)
+    (mapping, cc.rounds)
   }
 
   /** (id, component) for every node appearing in `edges`, where `component`

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,10 +16,11 @@ import graft.operators.SessionMemo
   *
   *   - one keyed aggregation (= one Exchange) per iteration, never a
   *     per-iteration driver collect of anything corpus-sized;
-  *   - `localCheckpoint` per round truncates the 8-round lineage (the CC
-  *     justification: an iterative plan replayed from parquet re-runs
-  *     every prior round on any executor loss — at 100 TB the checkpoint
-  *     is mandatory, at spec scale it keeps planning O(1) per round);
+  *   - every round loop runs through [[Iterate]], whose per-round
+  *     `localCheckpoint` truncates the lineage (the CC justification: an
+  *     iterative plan replayed from parquet re-runs every prior round on
+  *     any executor loss — at 100 TB the checkpoint is mandatory, at spec
+  *     scale it keeps planning O(1) per round);
   *   - all-INTEGER rank arithmetic (scaled by 10¹²) so the fixed-point
   *     iteration is bit-identical on both engines and the DuckDB oracle
   *     can unroll the rounds as CTEs (the [[Bpe]] trick) instead of a
@@ -53,8 +56,9 @@ object Graph {
     */
   val LinkCoeffs: Seq[(Long, Long)] = Seq((7L, 1L), (13L, 5L), (31L, 11L))
 
-  private def dsts(id: Column, n: Long): Column =
-    array(LinkCoeffs.map { case (a, b) => (id * a + b) % n }: _*)
+  private def dsts(id: Column, n: Long,
+      coeffs: Seq[(Long, Long)] = LinkCoeffs): Column =
+    array(coeffs.map { case (a, b) => (id * a + b) % n }: _*)
 
   /** Integer PageRank over the functional link graph: returns the top-100
     * documents by scaled rank after [[PrIters]] synchronous rounds.
@@ -62,38 +66,11 @@ object Graph {
     * every division truncating — exact on both engines.
     */
   def qPagerank(s: SparkSession, dir: String): DataFrame =
-    pagerankRanks(s, dir)
-      .orderBy(col("pr").desc, col("doc_id"))
-      .limit(100)
+    top100(pagerankRanks(s, dir))
 
   /** Full per-document rank table after [[PrIters]] rounds. */
-  private[operators] def pagerankRanks(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    // N is the one driver-side scalar the iteration needs (the bounded
-    // roundtrip class — cf. GlobalOrder's pass-1 totals)
-    val n = docs.count()
-    val init = PrScale / n
-    val tele = (TeleNum * init) / 100L
-    val nodes = docs.repartition(col("id")).persist()
-    var r = nodes.select(col("id"), lit(init).as("r")).localCheckpoint()
-    for (_ <- 1 to PrIters) {
-      // `div` (not `/`): true integral division — the float detour would
-      // be exact here only by magnitude accident, and the oracle is `//`
-      val contrib = r
-        .select(explode(dsts(col("id"), n)).as("dst"),
-          expr("r div 3").as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("cs"))
-      r = nodes
-        .join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (lit(tele) + expr(s"($DampNum * coalesce(cs, 0L)) div 100"))
-            .as("r"))
-        .localCheckpoint()
-    }
-    nodes.unpersist(blocking = false)
-    r.select(col("id").as("doc_id"), col("r").as("pr"))
-  }
+  private[operators] def pagerankRanks(s: SparkSession, dir: String): DataFrame =
+    pagerank(s, dir, storedEdges = false)
 
   /** The GENERAL form: PageRank over a MATERIALIZED edge table — the
     * shape a real link graph (stored, not derivable from the node id)
@@ -107,36 +84,51 @@ object Graph {
     * semantics: the functional-graph specialization is an optimization,
     * never a semantics change.
     */
-  def qPagerankEdges(s: SparkSession, dir: String): DataFrame = {
+  def qPagerankEdges(s: SparkSession, dir: String): DataFrame =
+    top100(pagerank(s, dir, storedEdges = true))
+
+  private def top100(ranks: DataFrame): DataFrame =
+    ranks.orderBy(col("pr").desc, col("doc_id")).limit(100)
+
+  /** The one PageRank loop: the two forms differ only in where a round's
+    * (dst, contribution) rows come from — the dst formula exploded next
+    * to the rank, or the rank⋈edges join against the stored graph.
+    */
+  private def pagerank(s: SparkSession, dir: String,
+      storedEdges: Boolean): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
+    // N is the one driver-side scalar the iteration needs (the bounded
+    // roundtrip class — cf. GlobalOrder's pass-1 totals)
     val n = docs.count()
     val init = PrScale / n
     val tele = (TeleNum * init) / 100L
     val nodes = docs.repartition(col("id")).persist()
     // the stored graph: materialized once, partitioned on the join key
-    val edges = docs
+    val edges = Option.when(storedEdges)(docs
       .select(col("id").as("src"), explode(dsts(col("id"), n)).as("dst"))
       .repartition(col("src"))
-      .persist()
-    var r = nodes.select(col("id"), lit(init).as("r")).localCheckpoint()
-    for (_ <- 1 to PrIters) {
-      val contrib = r
-        .join(edges, r("id") === edges("src"))
+      .persist())
+    val ranks = Iterate(nodes.select(col("id"), lit(init).as("r")),
+        PrIters, _ => false) { r =>
+      val out = edges match {
+        case Some(e) => r.join(e, r("id") === e("src")).select(col("dst"), col("r"))
+        case None => r.select(explode(dsts(col("id"), n)).as("dst"), col("r"))
+      }
+      // `div` (not `/`): true integral division — the float detour would
+      // be exact here only by magnitude accident, and the oracle is `//`
+      val contrib = out
         .select(col("dst"), expr("r div 3").as("c"))
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("cs"))
-      r = nodes
+      nodes
         .join(contrib, nodes("id") === contrib("dst"), "left")
         .select(col("id"),
           (lit(tele) + expr(s"($DampNum * coalesce(cs, 0L)) div 100"))
             .as("r"))
-        .localCheckpoint()
-    }
+    }.state
     nodes.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    r.select(col("id").as("doc_id"), col("r").as("pr"))
-      .orderBy(col("pr").desc, col("doc_id"))
-      .limit(100)
+    edges.foreach(_.unpersist(blocking = false))
+    ranks.select(col("id").as("doc_id"), col("r").as("pr"))
   }
 
   /** Extra ring-closure links for the triangle census only: id → id+1
@@ -146,6 +138,33 @@ object Graph {
     * the 3-link graph.
     */
   val TriCoeffs: Seq[(Long, Long)] = LinkCoeffs ++ Seq((1L, 1L), (1L, 2L))
+
+  /** (edges, N): the undirected simple edge set (a, b) of the functional
+    * graph over `coeffs` — symmetrized, self-loops dropped, oriented
+    * a < b, distinct — and the node count N its link formula needs.
+    */
+  private def undirected(s: SparkSession, dir: String,
+      coeffs: Seq[(Long, Long)]): (DataFrame, Long) = {
+    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
+    val n = docs.count()
+    val und = docs
+      .select(col("id").as("src"), explode(dsts(col("id"), n, coeffs)).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+    (und, n)
+  }
+
+  /** Both orientations of an undirected edge set as (src, dst),
+    * repartitioned on src ONCE and persisted: the probe side of a
+    * per-round join whose other side arrives hash-partitioned on the node
+    * id (the [[qPagerankEdges]] discipline).
+    */
+  private def bothWays(und: DataFrame): DataFrame =
+    und.select(col("a").as("src"), col("b").as("dst"))
+      .union(und.select(col("b").as("src"), col("a").as("dst")))
+      .repartition(col("src")).persist()
 
   /** TRIANGLE census + global clustering coefficient (the third classic
     * of the graph trio after components and PageRank; algorithm =
@@ -160,17 +179,8 @@ object Graph {
     * joins, no cartesian anywhere (plan-pinned in spec).
     */
   def qTriangles(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val n = docs.count()
-    val raw = docs.select(col("id").as("src"),
-      explode(array(TriCoeffs.map { case (a, b) =>
-        (col("id") * a + b) % n }: _*)).as("dst"))
-    val und = raw
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .persist()
+    val (edges, n) = undirected(s, dir, TriCoeffs)
+    val und = edges.persist()
     val e1 = und.select(col("a"), col("b").as("x"))
     val e2 = und.select(col("a"), col("b").as("y"))
     val wedges = e1.join(e2, "a").filter(col("x") < col("y"))
@@ -205,52 +215,33 @@ object Graph {
     * edge table, dedups, and anti-joins the visited set — work per
     * round ∝ frontier edge volume, total = O(E) across the whole
     * traversal, O(diameter) rounds (≈ log N on an expander, the web /
-    * citation / link-graph case this models). localCheckpoint per round
-    * truncates lineage exactly like the PageRank loop; the empty-
-    * frontier test doubles as the round's one materializing action. The
+    * citation / link-graph case this models). Each round's new frontier
+    * is the [[Iterate]] state, so it is checkpointed like every loop
+    * here, and the empty-frontier test reads that checkpoint. The
     * oracle replays the traversal as a recursive CTE with min-level
     * dedup — a different algorithm (path enumeration + min) agreeing on
     * the same levels.
     */
   def qBfs(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val n = docs.count()
-    val raw = docs.select(col("id").as("src"),
-      explode(array(TriCoeffs.map { case (a, b) =>
-        (col("id") * a + b) % n }: _*)).as("dst"))
-    val und = raw
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("src")).persist()
-    var levels = s.range(1)
-      .select(lit(0L).as("id"), lit(0L).as("lvl")).localCheckpoint()
-    var frontier = levels.select(col("id"))
-    var lvl = 0L
-    var done = false
-    while (!done && lvl < BfsMaxRounds) {
-      lvl += 1
-      val next = frontier.join(edges, frontier("id") === edges("src"))
+    val edges = bothWays(undirected(s, dir, TriCoeffs)._1)
+    // the visited set is a lazy union over the per-round CHECKPOINTED
+    // frontiers: re-checkpointing the union would copy every prior
+    // level's rows again each round — one extra O(|visited|) job per
+    // round. The union of ≤BfsMaxRounds checkpointed legs keeps the plan
+    // flat enough (each leg is a materialized leaf, nothing re-runs).
+    val legs = ArrayBuffer.empty[DataFrame]
+    val bfs = Iterate(s.range(1).select(lit(0L).as("id"), lit(0L).as("lvl")),
+        BfsMaxRounds, _.isEmpty) { frontier =>
+      legs += frontier
+      val ids = frontier.select(col("id"))
+      ids.join(edges, ids("id") === edges("src"))
         .select(col("dst").as("id")).distinct()
-        .join(levels, Seq("id"), "left_anti")
-        .select(col("id"), lit(lvl).as("lvl"))
-        .localCheckpoint()
-      if (next.isEmpty) done = true
-      else {
-        // lazy union over the per-round CHECKPOINTED frontiers (r15):
-        // re-checkpointing the union copied every prior level's rows
-        // again each round — one extra O(|visited|) job per round. The
-        // union of ≤BfsMaxRounds checkpointed legs keeps the plan flat
-        // enough (each leg is a materialized leaf, nothing re-runs).
-        levels = levels.union(next)
-        frontier = next.select(col("id"))
-      }
+        .join(legs.reduce(_ union _), Seq("id"), "left_anti")
+        .select(col("id"), lit(legs.size.toLong).as("lvl"))
     }
+    if (!bfs.done) legs += bfs.state
     edges.unpersist(blocking = false)
-    levels
+    legs.reduce(_ union _)
       .groupBy(col("lvl"))
       .agg(count(lit(1)).as("n_nodes"),
         min(col("id")).as("min_id"), max(col("id")).as("max_id"))
@@ -265,24 +256,15 @@ object Graph {
     * degree per node over the deduped undirected edges, then the
     * ≤max-degree-sized histogram.
     */
-  def qDegreeHist(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val n = docs.count()
-    val und = docs.select(col("id").as("src"),
-      explode(array(TriCoeffs.map { case (a, b) =>
-        (col("id") * a + b) % n }: _*)).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    und.select(explode(array(col("a"), col("b"))).as("id"))
+  def qDegreeHist(s: SparkSession, dir: String): DataFrame =
+    undirected(s, dir, TriCoeffs)._1
+      .select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
       .groupBy(col("deg")).agg(
         count(lit(1)).as("n_nodes"),
         min(col("id")).as("min_id"),
         max(col("id")).as("max_id"))
       .orderBy(col("deg"))
-  }
 
   /** Relaxation rounds for [[qSssp]]: distances are exact over all paths
     * of ≤ SsspIters edges (the hop-bounded Bellman–Ford contract — the
@@ -301,26 +283,23 @@ object Graph {
     * endpoints (both engines recompute it; nothing is stored), source is
     * node 0. Each round is one union + keyed min aggregation — ONE
     * Exchange, the [[ConnectedComponents]] discipline, with
-    * localCheckpoint truncating the 12-round lineage. State is the
+    * [[Iterate]] truncating the 12-round lineage. State is the
     * reached-node frontier table, never edges×rounds. Output: the
     * distance census (nodes per distance value — bounded by the max
     * path weight), exactly unrolled by the oracle's 12 CTE rounds.
     */
   def qSssp(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val n = docs.count()
-    var dist = s.range(1)
-      .select(lit(0L).as("id"), lit(0L).as("d")).localCheckpoint()
-    for (_ <- 1 to SsspIters) {
+    val n = Tables.documents(s, dir).count()
+    val dist = Iterate(s.range(1).select(lit(0L).as("id"), lit(0L).as("d")),
+        SsspIters, _ => false) { dist =>
       val cand = dist
         .select(col("id").as("u"), col("d"),
           explode(dsts(col("id"), n)).as("v"))
         .select(col("v").as("id"),
           (col("d") + 1L + (col("u") * 3L + col("v") * 5L) % 9L).as("d"))
-      dist = dist.union(cand)
+      dist.union(cand)
         .groupBy(col("id")).agg(min(col("d")).as("d"))
-        .localCheckpoint()
-    }
+    }.state
     dist.groupBy(col("d").as("dist"))
       .agg(count(lit(1)).as("n_nodes"),
         min(col("id")).as("min_id"), max(col("id")).as("max_id"))
@@ -340,7 +319,7 @@ object Graph {
     * DELETION. Each round recomputes degrees over the surviving edge
     * set (one explode + keyed aggregation — one Exchange), drops nodes
     * below k, and restricts edges to survivors (two semi-joins against
-    * the ≤|nodes| keep list); localCheckpoint truncates the 8-round
+    * the ≤|nodes| keep list); [[Iterate]] truncates the 8-round
     * lineage, and the per-round sizes are bounded driver roundtrips
     * (two scalars/round — the CC accumulator class). A FIXED round
     * count, not convergence detection, keeps the oracle a static
@@ -349,72 +328,36 @@ object Graph {
     * nodes, surviving edges).
     */
   def qKcore(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val n = docs.count()
-    val und = docs.select(col("id").as("src"),
-      explode(array(TriCoeffs.map { case (a, b) =>
-        (col("id") * a + b) % n }: _*)).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    var edges = und.localCheckpoint()
-    val profile = (1 to KCoreRounds).map { r =>
-      // keep list checkpointed ONCE per round (r15): the old lazy plan
-      // re-ran the degree aggregation for keep.count() on top of the
-      // evaluations inside the edge-restriction job; checkpointed, the
-      // two semi-joins and both census counts read the materialized
-      // ≤|nodes| list, so each round runs ONE degree aggregation and the
-      // count jobs are partition-sum reads of checkpointed data
-      val keep = edges
+    var keep: DataFrame = null
+    val census = ArrayBuffer.empty[(Long, Long, Long)]
+    // a FIXED round count: `done` never holds; it is where each round's
+    // census reads the checkpointed edge set and the keep list behind it
+    Iterate(undirected(s, dir, TriCoeffs)._1, KCoreRounds, edges => {
+      census += ((census.size + 1L, keep.count(), edges.count()))
+      false
+    }) { edges =>
+      // keep list checkpointed ONCE per round: lazy, keep.count() and the
+      // edge-restriction job each re-run the degree aggregation;
+      // checkpointed, both semi-joins and both census counts read the
+      // materialized ≤|nodes| list. A/B over 10 alternating traced
+      // curation pairs (4-vCPU host): same job and stage counts, q_kcore
+      // lower with it in 9 of 10 (median 3.22 s vs 3.70 s)
+      keep = edges
         .select(explode(array(col("a"), col("b"))).as("id"))
         .groupBy(col("id")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= KCoreK)
         .select(col("id"))
         .localCheckpoint()
-      edges = edges
+      edges
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      (r.toLong, keep.count(), edges.count())
     }
     import s.implicits._
-    profile.toDF("round", "n_nodes", "n_edges").orderBy(col("round"))
+    census.toSeq.toDF("round", "n_nodes", "n_edges").orderBy(col("round"))
   }
 
   /** Synchronous LPA rounds — fixed so the oracle is a static unroll. */
   val LpaIters = 4
-
-  /** Label propagation communities (Raghavan et al., Phys. Rev. E 2007)
-    * over the symmetrized functional graph — the community-detection
-    * member of the iterative family, with every nondeterminism the
-    * published algorithm leaves open PINNED: labels start as node ids,
-    * rounds are SYNCHRONOUS (asynchronous order-dependence gone), the
-    * update is the most frequent neighbor label with ties broken toward
-    * the SMALLEST label, and isolated/empty updates keep the previous
-    * label. All-integer, so after [[LpaIters]] rounds the assignment is
-    * bit-identical on both engines and the oracle unrolls the rounds as
-    * CTEs (argmax via a window on the oracle side; here via
-    * `max(struct(cnt, -lbl))` — no window, two Exchanges per round:
-    * per-(node, label) count, then per-node argmax). localCheckpoint per
-    * round truncates lineage as in every loop here. Output is the
-    * community census (size + representative), not the corpus-sized
-    * per-node table.
-    */
-  /** Undirected functional-graph edge set (a < b, distinct) — the shared
-    * frame under [[qLpa]] and [[qModularity]].
-    */
-  private def lpaUnd(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val n = docs.count()
-    docs.select(col("id").as("src"),
-      explode(array(LinkCoeffs.map { case (a, b) =>
-        (col("id") * a + b) % n }: _*)).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-  }
 
   private val lpaMemo = new SessionMemo[DataFrame]()
 
@@ -428,15 +371,9 @@ object Graph {
   private[operators] def lpaLabels(s: SparkSession, dir: String): DataFrame =
     lpaMemo.getOrElseUpdate(s, dir) {
       val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-      val und = lpaUnd(s, dir)
-      // both directions, repartitioned on the probe side once and persisted
-      // (the qPagerankEdges discipline: ranks arrive hash-partitioned from
-      // the previous round's aggregation, edges reuse their partitioning)
-      val edges = und.select(col("a").as("src"), col("b").as("dst"))
-        .union(und.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(col("src")).persist()
-      var lbl = docs.select(col("id"), col("id").as("lbl")).localCheckpoint()
-      for (_ <- 1 to LpaIters) {
+      val edges = bothWays(undirected(s, dir, LinkCoeffs)._1)
+      val lbl = Iterate(docs.select(col("id"), col("id").as("lbl")),
+          LpaIters, _ => false) { lbl =>
         val votes = edges
           .join(lbl.select(col("id").as("src"), col("lbl")), "src")
           .groupBy(col("dst"), col("lbl"))
@@ -444,15 +381,30 @@ object Graph {
           .groupBy(col("dst"))
           .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
           .select(col("dst"), (-col("m.nl")).as("new_lbl"))
-        lbl = lbl
+        lbl
           .join(votes, lbl("id") === votes("dst"), "left")
           .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-          .localCheckpoint()
-      }
+      }.state
       edges.unpersist(blocking = false)
       lbl
     }
 
+  /** Label propagation communities (Raghavan et al., Phys. Rev. E 2007)
+    * over the symmetrized functional graph — the community-detection
+    * member of the iterative family, with every nondeterminism the
+    * published algorithm leaves open PINNED: labels start as node ids,
+    * rounds are SYNCHRONOUS (asynchronous order-dependence gone), the
+    * update is the most frequent neighbor label with ties broken toward
+    * the SMALLEST label, and isolated/empty updates keep the previous
+    * label. All-integer, so after [[LpaIters]] rounds the assignment is
+    * bit-identical on both engines and the oracle unrolls the rounds as
+    * CTEs (argmax via a window on the oracle side; here via
+    * `max(struct(cnt, -lbl))` — no window, two Exchanges per round:
+    * per-(node, label) count, then per-node argmax), each round an
+    * [[Iterate]] round like every loop here. Output is the
+    * community census (size + representative), not the corpus-sized
+    * per-node table.
+    */
   def qLpa(s: SparkSession, dir: String): DataFrame =
     lpaLabels(s, dir).groupBy(col("lbl"))
       .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_id"))
@@ -472,7 +424,7 @@ object Graph {
     * sized join of the bounded community table against the edge frame.
     */
   def qModularity(s: SparkSession, dir: String): DataFrame = {
-    val und = lpaUnd(s, dir)
+    val und = undirected(s, dir, LinkCoeffs)._1
     val m = und.count()
     val lab = lpaLabels(s, dir)
     val intra = und
@@ -521,8 +473,8 @@ object Graph {
     * the SAME functional link graph as [[qBfs]]/[[qPagerank]]
     * ([[LinkCoeffs]]), reporting per depth the path count (3^d — fixed
     * out-degree) and the newly reached node count (min-distance
-    * frontier). Every module iterative hand-manages its loop with
-    * localCheckpoint lineage truncation because rounds there carry
+    * frontier). Every module iterative runs its rounds through
+    * [[Iterate]]'s per-round checkpoint because rounds there carry
     * corpus-scale state; this query is the surface proof that when the
     * frontier is BOUNDED, the engine's own recursion handles the loop
     * and the identical SQL runs on both engines — the oracle is the

@@ -125,7 +125,11 @@ object Multimodal {
       try {
         reader.setInput(iis, /* seekForwardOnly = */ true,
           /* ignoreMetadata = */ true)
-        val img = reader.read(0)
+        // the PNG reader rejects a non-PNG payload with its own IIOException
+        val img = try reader.read(0) catch {
+          case e: java.io.IOException =>
+            throw new IllegalArgumentException("undecodable image payload", e)
+        }
         require(img != null, "undecodable image payload")
         img
       } finally {

@@ -76,12 +76,14 @@ object Rehearse {
     val unknown = queries.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(8)(v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(
+        sys.error(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
     val s = SparkSession.builder()
       .withExtensions(new graft.GraftExtensions)
       .master(s"local[$cpus]")
       .appName("graft-rehearse")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")

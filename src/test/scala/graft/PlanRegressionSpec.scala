@@ -398,15 +398,20 @@ class PlanRegressionSpec extends SparkSpec with Matchers {
 
   test("q_pagerank: iteration rounds stay checkpoint-truncated — the " +
     "final plan reads one cached round, not the 8-round lineage") {
-    val plan = graft.operators.Graph.qPagerank(spark, sf())
-      .queryExecution.executedPlan.toString
-    // localCheckpoint per round: the deployed plan scans the final
-    // round's RDD, so no per-round Exchange chain survives into it
-    plan should include("Scan ExistingRDD")
-    plan should not include "CartesianProduct"
-    plan should not include "BroadcastNestedLoopJoin"
-    // top-100 is a TakeOrdered, never a global sort of the corpus
-    plan should include("TakeOrderedAndProject")
+    // every Iterate loop, and whether its output is a top-100
+    val loops = Seq("q_pagerank" -> true, "q_pagerank_edges" -> true,
+      "q_sssp" -> false, "q_lpa" -> true, "q_bfs" -> false)
+    for ((q, top100) <- loops) withClue(s"$q: ") {
+      val plan = graft.operators.Graph.queries(q)(spark, sf())
+        .queryExecution.executedPlan.toString
+      // localCheckpoint per round: the deployed plan scans checkpointed
+      // rounds' RDDs, so no per-round Exchange chain survives into it
+      plan should include("Scan ExistingRDD")
+      plan should not include "CartesianProduct"
+      plan should not include "BroadcastNestedLoopJoin"
+      // top-100 is a TakeOrdered, never a global sort of the corpus
+      if (top100) plan should include("TakeOrderedAndProject")
+    }
   }
 
   test("q_audio_dedup: WAV payloads never ride an Exchange — only " +

@@ -142,8 +142,14 @@ class MultimodalSpec extends SparkSpec with Matchers {
   }
 
   test("undecodable payload fails loudly, not silently") {
-    an[Exception] should be thrownBy
-      Multimodal.ImageIoCodec.rgbSums(Array[Byte](1, 2, 3))
+    // too short for any header, and a well-formed non-PNG (GIF) header
+    val payloads = Seq(Array[Byte](1, 2, 3),
+      "GIF89a\u0001\u0000\u0001\u0000".getBytes("ISO-8859-1"))
+    payloads.foreach { p =>
+      val e = the[IllegalArgumentException] thrownBy
+        Multimodal.ImageIoCodec.rgbSums(p)
+      e.getMessage should include("undecodable image payload")
+    }
   }
 
   test("WavIoCodec writes a real RIFF/WAVE container and round-trips samples exactly") {
