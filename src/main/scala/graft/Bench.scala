@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: times every registered query at the given SF, one JSON
   * line on stdout. Results are fully materialized through the noop sink
@@ -178,15 +178,16 @@ object Bench {
       "io_stall_us" -> psi("io"))
   }
 
-  /** Stage-10 family-key squeeze (see the call site for the full story):
-    * first char + vowel-dropped rest, truncated, colliding groups widened
-    * until injective. Families sharing a FULL vowel-squeeze ("cbo"/"cube"
-    * → "cb", "kanon"/"knn" → "knn") can never be separated by widening —
-    * the first build of this loop spun forever on exactly that pair at
-    * 261 queries — so they keep their RAW (distinct) family name, which
-    * restores termination: every other colliding key strictly lengthens
-    * toward its full distinct squeeze. Extracted from main so the spec
-    * can pin termination + injectivity on squeeze-twin inputs.
+  /** Family-key squeeze for the contract line's family form (see
+    * [[contractLine]]): first char + vowel-dropped rest, truncated,
+    * colliding groups widened until injective. Families sharing a FULL
+    * vowel-squeeze ("cbo"/"cube" → "cb", "kanon"/"knn" → "knn") can never
+    * be separated by widening — the first build of this loop spun forever
+    * on exactly that pair at 261 queries — so they keep their RAW
+    * (distinct) family name, which restores termination: every other
+    * colliding key strictly lengthens toward its full distinct squeeze.
+    * Reversible from docs/BENCH_DETAIL.json's full names by the same rule
+    * (documented in BASELINE.md "Canary normalization").
     */
   private[graft] def familyShortKeys(fams: Seq[String]): Map[String, String] = {
     def sq(f: String) = f.take(1) + f.drop(1).filterNot("aeiou".contains(_))
@@ -204,33 +205,71 @@ object Bench {
       colliding = out.groupBy(_._2).filter(_._2.size > 1)
     }
     require(out.values.toSeq.distinct.size == fams.size,
-      "stage-10 family-key squeeze aliases family names")
+      "family-key squeeze aliases family names")
     out
+  }
+
+  /** The untouched trivial query whose steady reading is the contract
+    * line's "canary": its cost tracks the HOST, not the code, so
+    * cross-round comparisons divide by (canary_now / canary_reference) —
+    * the rule and reference live in BASELINE.md "Canary normalization".
+    */
+  private[graft] val CanaryQuery = "q_median"
+
+  private def jmap(m: Iterable[(String, Double)], fmt: Double => String): String = m
+    .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    .mkString("{", ",", "}")
+
+  /** The driver's contract line — the LAST stdout line, parsed out of a
+    * 2 KB stdout tail, so it must stay within 2000 chars. While full query
+    * names fit (focused runs) they are used verbatim. Otherwise the
+    * queries map is one entry per FAMILY — the first underscore segment
+    * of the name with "q_" dropped, squeezed by [[familyShortKeys]] —
+    * valued at the family's summed steady seconds; failed queries (the
+    * negative sentinel) are left out of the sums and counted in "nfail"
+    * (present only when nonzero), so a failure cannot hide inside an
+    * aggregate. Per-query values are at 100 ms with trailing zeros
+    * trimmed; total and canary keep 10 ms (the canary is the
+    * normalization divisor — 100 ms on a ~1 s value is too coarse). Full
+    * precision, full names, build_total and the full sf path are on the
+    * detail line and in docs/BENCH_DETAIL.json.
+    */
+  private[graft] def contractLine(
+      total: Double,
+      results: Seq[(String, Double)],
+      canary: Option[Double],
+      basket: Seq[(String, Double)],
+      sfDir: String): String = {
+    def fixed(digits: Int)(v: Double) =
+      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+    val perQuery: Double => String = { v =>
+      val s = fixed(1)(v)
+      if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
+      else s
+    }
+    def line(queries: Seq[(String, Double)], nFail: Int): String =
+      s"""{"metric":"total","value":${fixed(3)(total)},"unit":"sec","queries":${
+        jmap(queries, perQuery)
+      }${if (nFail > 0) s""","nfail":$nFail""" else ""}${
+        canary.map(v => s""","canary":{"$CanaryQuery":${fixed(3)(v)}}""").getOrElse("")
+      }${if (basket.isEmpty) "" else s""","basket":${jmap(basket, fixed(3))}"""
+      },"sf":"${new java.io.File(sfDir).getName}"}"""
+    val verbatim = line(results, 0)
+    if (verbatim.length <= 2000) verbatim
+    else {
+      def famOf(k: String): String = k.stripPrefix("q_").takeWhile(_ != '_')
+      val famSums = results.groupBy { case (k, _) => famOf(k) }
+        .map { case (f, vs) => f -> vs.collect { case (_, v) if v >= 0 => v }.sum }
+        .toSeq.sortBy(_._1)
+      val keys = familyShortKeys(famSums.map(_._1))
+      line(famSums.map { case (f, v) => keys(f) -> v }, results.count(_._2 < 0))
+    }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // withExtensions: the Catalyst extension surface (functions, opt-in
-    // AQP rules, the TopKPerKey strategy) is installed in the SAME session
-    // the driver's gate runs — every injected rule is flag-gated off by
-    // default, so plans are unchanged except for queries that opt in
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // let a bucketed table's subset-key HashPartitioning satisfy
-      // multi-key joins (the partsupp (partkey,suppkey) joins ride the
-      // ps_partkey bucketing with no exchange); Spark 4 defaults this
-      // true out of skew caution — our bucket keys are the HIGH-cardinality
-      // halves of their key pairs, so the subset reuse cannot concentrate
-      // keys (documented in BASELINE.md, plan-pinned in TpcHSpec)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(s"local[${GraftSession.cpus}]")
+      .appName("graft-bench").getOrCreate()
 
     // optional args = subset of query names (focused timing runs);
     // default = everything registered. Unknown names fail fast — inside
@@ -289,7 +328,11 @@ object Bench {
           df.write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }
-      } catch { case _: Throwable => -1.0 }
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          -1.0
+      }
     // in-suite canary strip: one cheap scan-bound read every StripEvery
     // measured slots, plus a closing read, so mid-run host drift is
     // localizable per segment. Default = full-registry runs only (a
@@ -374,44 +417,17 @@ object Bench {
         buildSec(n) = m + math.max(0.0, math.min(first - m, re))
       }
     }
-    // Two output lines. The FINAL line is the driver's contract line and is
-    // kept compact (2-decimal per-query values with trailing zeros trimmed,
-    // no build map, basename sf): the driver stores only the last ~2 KB of
-    // stdout, and the full-precision line of earlier rounds overflowed that
-    // window, so it could never be parsed from the tail. Full precision
-    // (incl. the per-query build map) goes on the preceding "detail" line
-    // and to docs/BENCH_DETAIL.json.
-    def jmap(m: Iterable[(String, Double)], fmt: Double => String): String = m
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    // Two output lines: the detail line (full precision, incl. the
+    // per-query build map; also written to docs/BENCH_DETAIL.json) and,
+    // LAST, the compact contract line ([[contractLine]]).
     val full: Double => String = _.toString
-    val short: Double => String =
-      v => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // per-query values at 100 ms resolution with trailing zeros trimmed
-    // ("0.2"→"0.2", "1.0"→"1") keep the contract line inside the driver's
-    // 2 KB tail as the registry grows (88 queries + the canary field blew
-    // past the ~1925-char budget at 10 ms resolution — measured below in
-    // docs/BENCH_DETAIL; the skill recipe re-measures per added query);
-    // full precision is on the detail line
-    val short2: Double => String = { v =>
-      val s = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
-      else s
-    }
     val builds = buildSec.toSeq.sortBy(_._1).filter(_._2 >= 0.005)
     val queriesTotal = results.collect { case (_, v) if v >= 0 => v }.sum
     val buildTotal = buildSec.values.sum
     val total = queriesTotal + buildTotal
-    // canary: an untouched trivial query whose steady-state cost tracks
-    // the HOST, not the code — this box swings ~1.5× between measurement
-    // windows (BASELINE.md), so cross-round comparisons should divide per-
-    // query values by (canary_now / canary_reference); the ratio rule and
-    // the reference value live in BASELINE.md §"Canary normalization".
-    val canaryName = "q_median"
+    // canary: best of the two in-suite passes ([[CanaryQuery]])
     val canary = results
-      .collectFirst { case (n, v) if n == canaryName && v >= 0 => v }
-    def canaryJson(fmt: Double => String): String =
-      canary.map(v => s""","canary":{"$canaryName":${fmt(v)}}""").getOrElse("")
+      .collectFirst { case (n, v) if n == CanaryQuery && v >= 0 => v }
     // canary variance guard (round-10 lesson: two same-box readings 20 min
     // apart gave 0.814 vs 0.949 — a 17% swing in the NORMALIZATION DIVISOR
     // skews every cross-round comparison): after the suite, re-read the
@@ -430,9 +446,7 @@ object Bench {
       else Some((r(r.size / 2 - 1) + r(r.size / 2)) / 2.0)
     }
     val canary3: Option[Double] =
-      canary.flatMap(_ => medianOf((1 to 3).map(_ => once(canaryName))))
-    def canary3Json(fmt: Double => String): String =
-      canary3.map(v => s""","canary3":{"$canaryName":${fmt(v)}}""").getOrElse("")
+      canary.flatMap(_ => medianOf((1 to 3).map(_ => once(CanaryQuery))))
     // canary BASKET (round-12; the round-11 verdict's item 1): the single
     // q_median canary swung ±35% within one session — a one-query divisor
     // is hostage to whatever the host was doing during ITS two reads, and
@@ -445,7 +459,7 @@ object Bench {
     // (BASELINE.md §"Canary normalization" v2): host factor = MEDIAN over
     // members of (member_now / member_ref); per-member references live in
     // the BASELINE.md basket table. Keys stay 2 chars for the contract
-    // line's ~2040-char tail budget.
+    // line's 2000-char budget.
     // full-registry runs only (round-12 advisor note): a focused run's
     // partial, differently-warmed basket readings are not comparable to
     // the full-run reference medians BASELINE.md's v2 ratio rule defines,
@@ -458,9 +472,6 @@ object Bench {
           if (!names.contains(q)) None
           else medianOf((1 to 3).map(_ => once(q))).map(k -> _)
       }
-    def basketJson(fmt: Double => String): String =
-      if (basketReads.isEmpty) ""
-      else s""","basket":${jmap(basketReads, fmt)}"""
     // post-suite probes (scaladoc at PostProbes); full-registry runs
     // only, for the same reason as the basket — a focused run's probe
     // rides a differently-warmed JVM and is not the instrument
@@ -470,8 +481,8 @@ object Bench {
         .map(n => n -> once(n)).filter(_._2 >= 0)
     def postJson(fmt: Double => String): String =
       if (postReads.isEmpty) "" else s""","post":${jmap(postReads, fmt)}"""
-    // detail line only (the contract line's ~2040-char tail budget has no
-    // room for ~23 more values): readings in slot order, full precision
+    // detail line only (the contract line's 2000-char budget has no room
+    // for ~23 more values): readings in slot order, full precision
     val stripJson: String =
       if (strip.isEmpty) ""
       else s""","strip":{"q":"$StripQuery","every":$StripEvery,"sec":[${
@@ -510,8 +521,12 @@ object Bench {
             gauges.map(_.toMap.getOrElse(k, -1L)).mkString(",") + "]"
         }.mkString(",")}}"""
     }
+    def tagged(field: String, v: Option[Double]): String =
+      v.map(x => s""","$field":{"$CanaryQuery":${full(x)}}""").getOrElse("")
+    val basketJson =
+      if (basketReads.isEmpty) "" else s""","basket":${jmap(basketReads, full)}"""
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results, full)},"build":${jmap(builds, full)}${canaryJson(full)}${canary3Json(full)}${basketJson(full)}${postJson(full)}$stripJson$passJson$telemetryJson$hostJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results, full)},"build":${jmap(builds, full)}${tagged("canary", canary)}${tagged("canary3", canary3)}$basketJson${postJson(full)}$stripJson$passJson$telemetryJson$hostJson,"sf":"$sfDir"}"""
     // only a full-registry run may overwrite the committed artifact —
     // focused runs (explicit query args) would clobber it with a subset
     if (args.isEmpty)
@@ -520,163 +535,7 @@ object Bench {
         (detail + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () } // detail dump is best-effort
     println(detail)
-    // build_total and the full sfDir live on the detail line; the contract
-    // line carries the basename so every byte of the tail window buys a
-    // per-query value. The canary keeps 10 ms resolution (it is the
-    // divisor of the normalization — 100 ms on a ~1 s value is too coarse).
-    def contract(keys: String => String): String =
-      s"""{"metric":"total","value":${short(total)},"unit":"sec","queries":${
-        jmap(results.map { case (k, v) => keys(k) -> v }, short2)
-      }${canaryJson(short)}${basketJson(short)},"sf":"${new java.io.File(sfDir).getName}"}"""
-    // adaptive squeeze (documented in BASELINE.md "Canary normalization"):
-    // while full names fit the driver's ~2040-char stdout-tail budget they
-    // are used verbatim; once the registry grows past it, the redundant
-    // "q_" prefix is dropped from the contract-line keys ONLY (the detail
-    // line and docs/BENCH_DETAIL.json always keep full names) — worth
-    // ~2 chars x #queries, i.e. room for ~10 more queries per squeeze
-    val dropQ = (k: String) => if (k.startsWith("q_")) k.substring(2) else k
-    // stage-3 squeeze: single-letter family prefixes (mapping documented
-    // in BASELINE.md "Canary normalization" — detail line keeps full names)
-    val fam = Seq("dedup_" -> "d_", "events_" -> "e_", "text_" -> "t_",
-      "ann_" -> "a_", "multimodal_" -> "mm_", "embedding_" -> "em_",
-      "sample_" -> "s_", "join_" -> "j_", "window_" -> "w_")
-    val famKey = (k: String) => {
-      val base = dropQ(k)
-      fam.collectFirst { case (p, r) if base.startsWith(p) =>
-        r + base.substring(p.length) }.getOrElse(base)
-    }
-    // stage-4 squeeze (first needed at 118 queries, round 7): on top of
-    // the family prefixes, drop vowels from every character after the
-    // first — "tkn_bdgt" class keys. Deterministic from the full name
-    // (documented in BASELINE.md "Canary normalization"); detail line and
-    // docs/BENCH_DETAIL.json always keep full names.
-    val vowelKey = (k: String) => {
-      val base = famKey(k)
-      base.substring(0, 1) + base.substring(1).filterNot("aeiou".contains(_))
-    }
-    // stage-5 squeeze (built at 134 queries, round 7 continuation; first
-    // needed when stage-4 crosses the ~2040 budget at ≈145): on top of the
-    // vowel squeeze, truncate every underscore segment to its first 2
-    // chars; colliding keys (and only those) widen one char at a time
-    // until the map is injective again. Deterministic from the full
-    // registry name SET (widening is per colliding group, names compared
-    // after the stage-4 transform, which the require below keeps
-    // injective — at full width the segment map IS stage-4's, so the
-    // widening loop always terminates). Documented in BASELINE.md
-    // "Canary normalization"; detail line keeps full names.
-    def segSqueeze(startWidth: Int): Map[String, String] = {
-      def seg(n: String, w: Int) =
-        vowelKey(n).split('_').map(_.take(w)).mkString("_")
-      var width = names.map(_ -> startWidth).toMap
-      var out = names.map(n => n -> seg(n, width(n))).toMap
-      var colliding = out.groupBy(_._2).filter(_._2.size > 1)
-      while (colliding.nonEmpty) {
-        colliding.values.flatten.foreach { case (n, _) =>
-          width = width.updated(n, width(n) + 1)
-        }
-        out = names.map(n => n -> seg(n, width(n))).toMap
-        colliding = out.groupBy(_._2).filter(_._2.size > 1)
-      }
-      out
-    }
-    val segKey: Map[String, String] = segSqueeze(2)
-    // stage-6 squeeze (built at 162 queries, round 7 fourth continuation;
-    // engages when stage-5 crosses the budget at ≈168): the same
-    // per-collision widening loop seeded at 1-char segments.
-    val segKey1: Map[String, String] = segSqueeze(1)
-    // stage-7 squeeze (built at 176 queries, round 7 fifth continuation;
-    // engages when stage-6 crosses the budget at ≈183): keys are the
-    // query's INDEX in the registry's SORTED full-name list, base-10 —
-    // deterministic from the registry set, trivially injective, and
-    // reversible from the detail line's full-name map (same sort).
-    // Holds to ≈200 queries; documented in BASELINE.md.
-    val idxKey: Map[String, String] =
-      names.zipWithIndex.map { case (n, i) => n -> i.toString }.toMap
-    // stage-8 squeeze (built at 195 queries, round 7 sixth continuation;
-    // engages when stage-7 crosses the budget at ≈205): the same sorted
-    // registry indices in base-36 (0-9a-z) — two characters address 1296
-    // queries; reversible from the detail line exactly like stage-7.
-    val idx36Key: Map[String, String] =
-      names.zipWithIndex.map { case (n, i) =>
-        n -> java.lang.Integer.toString(i, 36) }.toMap
-    // stage-9 squeeze (built at 216 queries, round 8; engages when
-    // stage-8 crosses the budget at ≈217): the value-precision lever
-    // BASELINE.md documents as the post-260 plan, pulled forward because
-    // base-36 keys never shrink below 9 chars/query while family sums
-    // amortize to ~0 for queries joining an existing family. Keys become
-    // the FAMILY — the first underscore segment of the full name with
-    // any "q_" prefix dropped ("dedup", "ann", "join", …) — and each
-    // value is the family's summed steady seconds. Failed queries
-    // (negative sentinel) are EXCLUDED from the sums and surfaced in an
-    // explicit "nfail" field instead (present only when nonzero), so a
-    // failure cannot hide inside an aggregate. Per-query full precision
-    // stays on the detail line and in the committed
-    // docs/BENCH_DETAIL.json; family membership is derivable from the
-    // registry name list by the same first-segment rule, so the line
-    // stays reversible like stages 7-8.
-    def famOf(k: String): String = {
-      val base = if (k.startsWith("q_")) k.substring(2) else k
-      base.takeWhile(_ != '_')
-    }
-    val famSums: Seq[(String, Double)] = results
-      .groupBy { case (k, _) => famOf(k) }
-      .map { case (f, vs) =>
-        f -> vs.collect { case (_, v) if v >= 0 => v }.sum }
-      .toSeq.sortBy(_._1)
-    val nFail = results.count(_._2 < 0)
-    def famContract: String =
-      s"""{"metric":"total","value":${short(total)},"unit":"sec","queries":${
-        jmap(famSums, short2)
-      }${if (nFail > 0) s""","nfail":$nFail""" else ""}${canaryJson(short)}${basketJson(short)},"sf":"${new java.io.File(sfDir).getName}"}"""
-    // stage-10 squeeze (built at 260 queries, round 8 fourth
-    // continuation; engages when stage-9 crosses the budget at ≈270
-    // families-worth of keys): the FAMILY keys themselves go through the
-    // stage-4/5 treatment — keep the first character, vowel-drop the
-    // rest, truncate, and widen only colliding groups until injective.
-    // Vowel-drop is NOT injective over distinct names ("cbo"/"cube" →
-    // "cb", "kanon"/"knn" → "knn" — both pairs live in this registry),
-    // so families sharing a FULL squeeze can never be separated by
-    // widening; they keep their RAW family name (distinct by
-    // construction), which also bounds the loop: every other colliding
-    // key strictly lengthens toward its full distinct squeeze.
-    // Reversible from docs/BENCH_DETAIL.json's full names via the same
-    // first-segment + vowel rule (raw-name keys ARE the family name);
-    // documented in BASELINE.md "Canary normalization".
-    val famShort: Map[String, String] = familyShortKeys(famSums.map(_._1))
-    def famContract10: String =
-      s"""{"metric":"total","value":${short(total)},"unit":"sec","queries":${
-        jmap(famSums.map { case (f, v) => famShort(f) -> v }, short2)
-      }${if (nFail > 0) s""","nfail":$nFail""" else ""}${canaryJson(short)}${basketJson(short)},"sf":"${new java.io.File(sfDir).getName}"}"""
-    // the squeezes must stay injective over the registry: a future
-    // q_t_foo would alias with q_text_foo's squeezed key and silently
-    // merge two queries on the contract line (round-5 advisor note)
-    for (keys <- Seq(dropQ, famKey, vowelKey, segKey, segKey1, idxKey,
-      idx36Key)) {
-      val squeezed = names.map(keys)
-      require(squeezed.distinct.size == names.size,
-        s"contract-line key squeeze aliases query names: ${
-          squeezed.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k
-          }.mkString(", ")}")
-    }
-    val plain = contract(identity)
-    val noQ = contract(dropQ)
-    val famLine = contract(famKey)
-    val vowelLine = contract(vowelKey)
-    println(
-      if (plain.length <= 2000) plain
-      else if (noQ.length <= 2000) noQ
-      else if (famLine.length <= 2000) famLine
-      else if (vowelLine.length <= 2000) vowelLine
-      else { val segLine = contract(segKey)
-        if (segLine.length <= 2000) segLine
-        else { val seg1Line = contract(segKey1)
-          if (seg1Line.length <= 2000) seg1Line
-          else { val idxLine = contract(idxKey)
-            if (idxLine.length <= 2000) idxLine
-            else { val idx36Line = contract(idx36Key)
-              if (idx36Line.length <= 2000) idx36Line
-              else if (famContract.length <= 2000) famContract
-              else famContract10 } } } })
+    println(contractLine(total, results, canary, basketReads, sfDir))
     spark.stop()
   }
 }

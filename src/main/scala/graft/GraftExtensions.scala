@@ -12,7 +12,7 @@ import graft.functions.{BitmapAgg, BitmapAndCard, BitmapCard, BitmapOrCard, Bitm
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * GraftSession.builder("local[8]").getOrCreate() // installs it
   * }}}
   *
   * after which `vec_dot` / `vec_cosine` resolve in any SQL of the session.

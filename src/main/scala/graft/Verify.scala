@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,21 +15,8 @@ object Verify {
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}; " +
         s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // withExtensions: the Catalyst extension surface (functions, opt-in
-    // AQP rules, the TopKPerKey strategy) is installed in the SAME session
-    // the driver's gate runs — every injected rule is flag-gated off by
-    // default, so plans are unchanged except for queries that opt in
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // subset-key co-partitioning for bucketed-table joins (see Bench)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(s"local[${GraftSession.cpus}]")
+      .appName("graft-verify").getOrCreate()
     new java.io.File(outDir).mkdirs()
     val selected =
       if (only.isEmpty) SparkEntry.queries

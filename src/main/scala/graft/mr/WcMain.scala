@@ -1,7 +1,5 @@
 package graft.mr
 
-import org.apache.spark.sql.SparkSession
-
 /** Reference-parity CLI, mirroring `wc.go:46-70`'s mode dispatch.
   *
   * The reference has four modes: `sequential` (one process),
@@ -35,13 +33,7 @@ object WcMain {
   private def run(master: String, in: String, out: String, rest: List[String]): Unit = {
     val nMap = rest.headOption.map(_.toInt).getOrElse(0)
     val nReduce = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-wc")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder(master).appName("graft-wc").getOrCreate()
     try {
       val job = JobSpec(in, out, nMap = nMap, nReduce = nReduce)
       MRJob.runSequential(spark, job, WordCount.mapFn, WordCount.reduceFn)

@@ -46,6 +46,22 @@ private[graft] object SessionMemo {
       df
     }
   }
+
+  /** Content fingerprint of a file or directory tree: every file's path,
+    * size and mtime, sorted. A rewrite at the same path changes it, so
+    * reuse keyed on it cannot read stages built from the old contents.
+    */
+  private[graft] def fingerprint(s: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val out = Seq.newBuilder[String]
+    while (files.hasNext) {
+      val f = files.next()
+      out += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+    }
+    out.result().sorted.mkString("|")
+  }
   // Wall nanos spent INSIDE memo thunks, outermost only (a thunk that
   // triggers another memo's build counts once). graft.Bench reads deltas
   // around query construction to attribute the "build" column to actual

@@ -348,6 +348,12 @@ object SqlSurface {
   def qSqlPipelineWide(s: SparkSession, dir: String): DataFrame =
     sqlPipeline(s, dir, Dedup.WideRowsPerBand, dfKill = true, variant = "w_")
 
+  /** Per session and variant-free stage table: the fingerprint of the
+    * `documents.parquet` the table was last built from in that session.
+    */
+  private val sharedStages =
+    new SessionMemo[java.util.concurrent.atomic.AtomicReference[String]]()
+
   private def sqlPipeline(
       s: SparkSession, dir: String,
       rowsPerBand: Int, dfKill: Boolean, variant: String): DataFrame = {
@@ -380,15 +386,24 @@ object SqlSurface {
     // gate→clean→shingle build); a VARIANT invocation that finds them
     // already built in this session scans them instead of re-deriving
     // the whole chain (same dir-tagged name ⇒ same deterministic
-    // content — the tables are pure functions of the corpus dir). In
-    // the bench's sorted order the default pipeline rebuilds them
-    // moments before the wide variant runs, so every pass still pays
+    // content — the tables are pure functions of the corpus). Reuse
+    // requires that THIS session built the table from the SAME
+    // documents.parquet contents (file names, sizes, mtimes): a corpus
+    // rewritten at the same path rebuilds instead of reading stale
+    // stages. In the bench's sorted order the default pipeline rebuilds
+    // them moments before the wide variant runs, so every pass still pays
     // the shared build exactly once, inside a timed window.
     def st(name: String): String = plTable(dir, name)
-    def matShared(table: String, query: String): Unit =
-      if (variant.isEmpty || !s.catalog.tableExists(table))
+    val corpusFp = SessionMemo.fingerprint(s, s"$dir/documents.parquet")
+    def matShared(table: String, query: String): Unit = {
+      val built = sharedStages.getOrElseUpdate(s, table)(
+        new java.util.concurrent.atomic.AtomicReference[String])
+      if (variant.isEmpty || built.get != corpusFp ||
+          !s.catalog.tableExists(table)) {
         mat(table, query)
-      else if (profile) println(s"## pl $variant${table.take(24)} (reused)")
+        built.set(corpusFp)
+      } else if (profile) println(s"## pl $variant${table.take(24)} (reused)")
+    }
     s.sql(
       s"""CREATE OR REPLACE TEMPORARY VIEW ${st("corpus")} AS
          |SELECT doc_id, text FROM parquet.`$dir/documents.parquet`

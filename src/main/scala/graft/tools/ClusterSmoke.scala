@@ -27,18 +27,25 @@ import graft.SparkEntry
   */
 object ClusterSmoke {
 
-  private def session(master: String, extra: Map[String, String]): SparkSession = {
-    val b = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(master)
-      .appName(s"graft-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** Executor JVMs are fresh processes: they need the compiled graft
+    * classes (the custom expressions deserialize + codegen there) and the
+    * JDK-17 module opens that spark-submit would normally inject. Shared
+    * with [[FaultSmoke]], which runs the same local-cluster setup.
+    */
+  private[tools] def clusterConf: Map[String, String] = {
+    val classesDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
+    val addOpens = Seq(
+      "java.base/java.lang", "java.base/java.lang.invoke",
+      "java.base/java.lang.reflect", "java.base/java.io",
+      "java.base/java.net", "java.base/java.nio",
+      "java.base/java.util", "java.base/java.util.concurrent",
+      "java.base/java.util.concurrent.atomic",
+      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+      "java.base/sun.security.action", "java.base/sun.util.calendar")
+      .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+    Map(
+      "spark.executor.extraClassPath" -> classesDir,
+      "spark.executor.extraJavaOptions" -> addOpens)
   }
 
   private def counts(
@@ -46,7 +53,11 @@ object ClusterSmoke {
       extra: Map[String, String],
       names: Seq[String],
       sfDir: String): Map[String, Long] = {
-    val s = session(master, extra)
+    val s = graft.GraftSession.builder(master)
+      .appName("graft-cluster-smoke")
+      .config("spark.sql.shuffle.partitions", "8")
+      .config(extra)
+      .getOrCreate()
     try names.map { n =>
       val c = try SparkEntry.queries(n)(s, sfDir).count()
       catch {
@@ -68,23 +79,6 @@ object ClusterSmoke {
     val names =
       if (args.length > 1) args.toSeq.tail
       else SparkEntry.queries.keys.toSeq.sorted
-
-    // Executor JVMs are fresh processes: they need the compiled graft
-    // classes (the custom expressions deserialize + codegen there) and the
-    // JDK-17 module opens that spark-submit would normally inject.
-    val classesDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val clusterConf = Map(
-      "spark.executor.extraClassPath" -> classesDir,
-      "spark.executor.extraJavaOptions" -> addOpens)
 
     val local = counts("local[4]", Map.empty, names, sfDir)
     val cluster = counts("local-cluster[2,2,1024]", clusterConf, names, sfDir)

@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
-import graft.SparkEntry
-
-/** Dump formatted physical plans for plan review:
+/** Dump formatted physical plans for plan review, from the session the
+  * bench runs ([[GraftSession.builder]] at `local[SPARK_GRAFT_CPUS]`):
   * `sbt "runMain graft.tools.Explain q1_agg q_join_shuffle ..."` (no args =
   * a standard headline set).
   */
@@ -18,17 +17,15 @@ object Explain {
         "q_decontaminate", "q_lm_score", "q_ngram_novelty",
         "q_text_selfrepeat", "q_embedding_quantize", "q_events_sliding",
         "q_multimodal_frames")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.mkString(", ")}; " +
+        s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
+    val spark = GraftSession.builder(s"local[${GraftSession.cpus}]")
+      .appName("graft-explain").getOrCreate()
+    try names.foreach { n =>
       println(s"\n======== $n ========")
       SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").explain("formatted")
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

@@ -68,27 +68,11 @@ object FaultSmoke {
 
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(40000000L)
-    val classesDir =
-      new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val s = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
+    val s = graft.GraftSession.builder("local-cluster[2,2,1024]")
       .appName("graft-fault-smoke")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.executor.extraJavaOptions", addOpens)
+      .config(ClusterSmoke.clusterConf)
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
 
     val removed = new AtomicInteger(0)
     s.sparkContext.addSparkListener(new SparkListener {

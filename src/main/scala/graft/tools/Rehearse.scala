@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerable scale-rehearsal harness (round-12 verdict item 5): the
   * 1×/10×/30×/100× scaling tables in BASELINE.md were hand-assembled from
   * session logs; this main rebuilds each scale point with
@@ -76,20 +74,9 @@ object Rehearse {
     val unknown = queries.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(8)(v =>
-      v.trim.toIntOption.filter(_ > 0).getOrElse(
-        sys.error(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
-    val s = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-rehearse")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cpus
+    val s = graft.GraftSession.builder(s"local[$cpus]")
+      .appName("graft-rehearse").getOrCreate()
 
     def corpusDir(n: Int): String =
       if (n == 1) src

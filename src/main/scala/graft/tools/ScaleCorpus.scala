@@ -75,15 +75,8 @@ object ScaleCorpus {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_scaled")
     val n = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-corpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.GraftSession.builder(s"local[${graft.GraftSession.cpus}]")
+      .appName("graft-scale-corpus").getOrCreate()
     build(s, src, dst, n)
     s.stop()
   }

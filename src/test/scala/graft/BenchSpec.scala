@@ -87,6 +87,39 @@ class BenchSpec extends AnyFunSuite with Matchers {
     m1("load1m") should be >= -1L
   }
 
+  test("contract line: the full registry gets the family form (family sums, " +
+    "failures counted in nfail, canary + basket) within the 2000-char " +
+    "budget; a focused subset gets the verbatim full-name form") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    // synthetic readings: the first query failed (the -1.0 sentinel),
+    // every other one took 1 s
+    val results = names.map(n => n -> (if (n == names.head) -1.0 else 1.0))
+    val basket = Bench.CanaryBasket.map { case (k, _) => k -> 0.5 }
+    val line = Bench.contractLine(123.456, results, Some(0.81), basket,
+      "/data/sf0.1")
+    line.length should be <= 2000
+    line should startWith(
+      """{"metric":"total","value":123.456,"unit":"sec","queries":{""")
+    line should endWith(
+      ""","nfail":1,"canary":{"q_median":0.810},"basket":{"sc":0.500,""" +
+        """"sh":0.500,"ex":0.500,"wi":0.500,"jo":0.500},"sf":"sf0.1"}""")
+    def fam(k: String) = k.stripPrefix("q_").takeWhile(_ != '_')
+    val members = names.groupBy(fam)
+    val keys = Bench.familyShortKeys(members.keys.toSeq.sorted)
+    val got = """"([^"]+)":([0-9.]+)""".r
+      .findAllMatchIn(line.substring(line.indexOf("\"queries\""),
+        line.indexOf("}")))
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    got shouldBe members.map { case (f, ms) =>
+      keys(f) -> ms.count(_ != names.head).toDouble }
+
+    Bench.contractLine(3.157, Seq("q_kcore" -> 2.345, "q_median" -> 0.812),
+      Some(0.812), Seq.empty, "/data/sf0.001") shouldBe
+      """{"metric":"total","value":3.157,"unit":"sec","queries":""" +
+      """{"q_kcore":2.3,"q_median":0.8},"canary":{"q_median":0.812},""" +
+      """"sf":"sf0.001"}"""
+  }
+
   test("stage-10 squeeze holds over the live registry's family set") {
     def fam(k: String) = {
       val b = if (k.startsWith("q_")) k.substring(2) else k

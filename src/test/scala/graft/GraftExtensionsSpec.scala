@@ -760,7 +760,8 @@ class GraftExtensionsSpec extends AnyFunSuite with Matchers {
     } finally spark.conf.set(graft.plans.MvRewrite.Flag, "false")
   }
 
-  /** Fresh session sharing the JVM's SparkContext (see first test's note).
+  /** Fresh factory session ([[GraftSession.builder]]) sharing the JVM's
+    * SparkContext (see first test's note).
     * Forces the canonical [[SparkSpec.session]] context FIRST: if this
     * suite happens to run before any SparkSpec suite, `.create()` would
     * otherwise build the JVM-wide context at local[2] and every later
@@ -769,14 +770,6 @@ class GraftExtensionsSpec extends AnyFunSuite with Matchers {
     */
   private def extSession(name: String): SparkSession = {
     SparkSpec.session
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .create()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+    GraftSession.builder("local[2]").appName(name).create()
   }
 }

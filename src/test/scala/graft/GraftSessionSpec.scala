@@ -25,6 +25,16 @@ class GraftSessionSpec extends SparkSpec with Matchers {
     plan should include("PushedFilters: [IsNotNull(o_orderkey), EqualTo(o_orderkey,42)]")
   }
 
+  test("SPARK_GRAFT_CPUS: a positive integer (surrounding blanks allowed), " +
+    "every core when unset, and a loud failure for anything else") {
+    GraftSession.parseCpus(Some(" 8 ")) shouldBe 8
+    GraftSession.parseCpus(None) shouldBe
+      Runtime.getRuntime.availableProcessors
+    for (bad <- Seq("0", "-2", "abc"))
+      the[RuntimeException] thrownBy GraftSession.parseCpus(Some(bad)) should
+        have message s"SPARK_GRAFT_CPUS must be a positive integer, got '$bad'"
+  }
+
   test("simhash supports the full 64-bit width") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -704,6 +704,51 @@ class PlanRegressionSpec extends SparkSpec with Matchers {
     snap() shouldBe before
   }
 
+  test("q_sql_pipeline_wide: a corpus rewritten at the same path rebuilds " +
+    "the shared gate/shs stages — the wide ledger equals a from-scratch " +
+    "wide run, never one over stages of the old corpus") {
+    import java.nio.file.{Files, Path}
+    import graft.operators.SqlSurface
+    def ledger(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    def copyTree(from: Path, to: Path): Unit = {
+      val walk = Files.walk(from)
+      try walk.forEach { p =>
+        val q = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q)
+        else Files.copy(p, q)
+      }
+      finally walk.close()
+    }
+    val tmp = Files.createTempDirectory("graft-pl-rewrite")
+    try {
+      val dir = tmp.resolve("corpus")
+      copyTree(java.nio.file.Paths.get(sf()), dir)
+      SqlSurface.qSqlPipeline(spark, dir.toString).collect()
+      // same path, new contents: 50 extra documents, exact copies of
+      // existing ones under fresh ids (duplicates when built from scratch)
+      val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+      docs.union(docs.filter(col("doc_id") < 50)
+          .withColumn("doc_id", col("doc_id") + 1000L))
+        .write.parquet(tmp.resolve("staged").toString)
+      Files.delete(dir.resolve("documents.parquet"))
+      Files.move(tmp.resolve("staged"), dir.resolve("documents.parquet"))
+      val got = ledger(SqlSurface.qSqlPipelineWide(spark, dir.toString))
+      val fresh = tmp.resolve("fresh")
+      copyTree(dir, fresh)
+      val want = ledger(SqlSurface.qSqlPipelineWide(spark, fresh.toString))
+      got.size shouldBe want.size
+      want.collect { case (id, "duplicate", _) if id >= 1000 => id } should
+        not be empty
+      got shouldBe want
+    } finally {
+      val walk = Files.walk(tmp)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally walk.close()
+    }
+  }
+
   test("q_corr_matrix: ONE lineitem scan + ONE aggregation — the 6-pair " +
     "matrix is a stack() over the single sufficient-stats row") {
     val plan = Relational.qCorrMatrix(spark, sf())
