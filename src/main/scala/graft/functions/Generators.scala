@@ -126,8 +126,8 @@ object Generators {
       val t = child.eval(input)
       if (t == null) Nil
       else {
-        val toks = t.asInstanceOf[UTF8String].toString
-          .split(graft.mr.WordCount.TokenSep).filter(_.nonEmpty)
+        val toks = graft.mr.WordCount.TokenPattern
+          .split(t.asInstanceOf[UTF8String].toString).filter(_.nonEmpty)
         toks.iterator.zipWithIndex.map { case (tok, i) =>
           InternalRow(i, UTF8String.fromString(tok))
         }

@@ -18,9 +18,10 @@ final case class KeyValue(key: String, value: String)
   * plus the output path the reference derives from the input name
   * (`mapreduce.go:221-225`).
   *
-  * In Spark, `nMap` maps to input-split parallelism (`minPartitions` hint) and
-  * `nReduce` to shuffle partitioning. Both are *hints*: at 100 TB, AQE should
-  * own the shuffle partition count, so `nReduce <= 0` means "let Spark decide".
+  * In Spark, `nMap` maps to the input split count and `nReduce` to the
+  * shuffle partition count. `<= 0` means "let Spark decide": the session's
+  * default parallelism for the splits, AQE for the shuffle (at 100 TB, AQE
+  * should own the shuffle partition count).
   */
 final case class JobSpec(
     inputPath: String,
@@ -47,28 +48,30 @@ final case class JobSpec(
   *     partial aggregation keeps shuffle volume O(distinct keys), not O(rows).
   *
   * Scale notes (100 TB):
-  *   - the holistic path (`groupByKey.mapGroups`) materializes one key's
-  *     values on one task — same skew hazard as the reference; the docs steer
-  *     users to the Aggregator path, which Spark turns into partial+final
-  *     `HashAggregateExec` with spill.
-  *   - the single-file sorted TSV sink (`coalesce(1)`) is the reference's
-  *     contract (`mapreduce.go:256`), kept as an opt-in mode; `sortedOutput`
-  *     with `coalesce = false` writes a range-partitioned globally-sorted
-  *     directory instead, which is the form that survives at scale.
+  *   - the holistic path sends every value of a key to one task — same skew
+  *     hazard as the reference (the run walk streams them, it does not
+  *     buffer them); the docs steer users to the Aggregator path, which
+  *     Spark turns into partial+final `HashAggregateExec` with spill.
+  *   - the single-file sorted TSV sink (one partition) is the reference's
+  *     contract (`mapreduce.go:256`), kept as an opt-in mode;
+  *     `writeSortedTsv` with `singleFile = false` writes a range-partitioned
+  *     globally-sorted directory instead, the form that survives at scale.
   */
 object MRJob {
 
-  /** Read the job input as a line Dataset. The reference's `Split`
-    * (`mapreduce.go:74-112`) chunks on line boundaries; Spark's text source
-    * does the same natively, with `nMap` as a minimum-split hint.
+  /** Read the job input as a line Dataset cut like the reference's `Split`
+    * (`mapreduce.go:74-112`): contiguous line-aligned byte ranges, no
+    * shuffle — `nMap` splits when pinned (narrowed with `coalesce` if Hadoop
+    * cuts one more), else `defaultParallelism`, so every core maps even a
+    * file smaller than one SQL scan split. `inputPath` is one file, as in
+    * the reference: unlike the SQL file scan, this reader packs no files.
     */
   def readLines(spark: SparkSession, job: JobSpec): Dataset[String] = {
     import spark.implicits._
-    // same default line-separator handling in both branches — a pinned
-    // lineSep only here would make CRLF input tokenize differently
-    // depending on whether nMap was hinted
-    val df = spark.read.textFile(job.inputPath)
-    (if (job.nMap > 0) df.repartition(job.nMap) else df).as[String]
+    val n = if (job.nMap > 0) job.nMap else spark.sparkContext.defaultParallelism
+    val lines = spark.sparkContext.textFile(job.inputPath, n)
+    spark.createDataset(
+      if (job.nMap > 0 && lines.getNumPartitions > n) lines.coalesce(n) else lines)
   }
 
   /** The mapped-and-shuffle-ready pairs: Map applied per line, then (only if
@@ -81,9 +84,8 @@ object MRJob {
       spark: SparkSession,
       job: JobSpec,
       map: String => IterableOnce[KeyValue]): Dataset[KeyValue] = {
-    import spark.implicits._
     val kv = readLines(spark, job).flatMap(map)
-    if (job.nReduce > 0) kv.repartition(job.nReduce, $"key") else kv
+    if (job.nReduce > 0) kv.repartition(job.nReduce, col("key")) else kv
   }
 
   /** Holistic reduce — exact parity with `DoReduce` (`mapreduce.go:178-219`):
@@ -91,41 +93,28 @@ object MRJob {
     * guaranteed order (same contract as the reference, SURVEY §2.3.2).
     * Prefer [[runAggregated]] for algebraic reduces.
     *
-    * When `nReduce` is pinned, this is the literal DoReduce plan: ONE hash
-    * shuffle into exactly nReduce partitions, a per-partition key sort
+    * The plan is the literal DoReduce: ONE hash shuffle by key (into
+    * exactly `nReduce` partitions when pinned; otherwise at the session
+    * partition count, which AQE may coalesce), a per-partition key sort
     * (`sort.Strings`, `mapreduce.go:203-207`), and a streaming walk over
-    * consecutive key runs. (A `groupByKey` here would add a second shuffle
-    * at the session partition count — its lambda key is opaque to Catalyst —
-    * which both wastes I/O and ignores the knob.) Without `nReduce`, the
-    * Catalyst-managed `groupByKey` path lets AQE size the reduce stage.
+    * consecutive key runs.
     */
   def runHolistic(
       spark: SparkSession,
       job: JobSpec,
       map: String => IterableOnce[KeyValue],
       reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
-    reduceStage(readLines(spark, job).flatMap(map)(kvEncoder(spark)), job, reduce)
+    reduceStage(readLines(spark, job).flatMap(map), job, reduce)
 
-  /** The shared reduce stage (see [[runHolistic]] for the plan rationale). */
+  /** The shared reduce stage (see [[runHolistic]] for the plan). */
   private def reduceStage(
       kv: Dataset[KeyValue],
       job: JobSpec,
-      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] = {
-    val spark = kv.sparkSession
-    import spark.implicits._
-    if (job.nReduce > 0)
-      kv.repartition(job.nReduce, $"key")
-        .sortWithinPartitions($"key")
-        .mapPartitions(reduceRuns(_, reduce))
-    else
-      kv.groupByKey(_.key)
-        .mapGroups((k, vs) => KeyValue(k, reduce(k, vs.map(_.value))))
-  }
+      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
+    (if (job.nReduce > 0) kv.repartition(job.nReduce, col("key")) else kv.repartition(col("key")))
+      .sortWithinPartitions("key").mapPartitions(reduceRuns(_, reduce))
 
-  private def kvEncoder(spark: SparkSession): Encoder[KeyValue] = {
-    import spark.implicits._
-    implicitly[Encoder[KeyValue]]
-  }
+  private implicit val kvEncoder: Encoder[KeyValue] = Encoders.product[KeyValue]
 
   /** Reduce consecutive same-key runs of a key-sorted partition — keys are
     * disjoint across partitions after the hash repartition (SURVEY §2.3.3),
@@ -164,7 +153,9 @@ object MRJob {
       agg: Aggregator[KeyValue, B, O])(implicit
       oe: Encoder[(String, O)]): Dataset[(String, O)] = {
     import spark.implicits._
-    mapped(spark, job, map).groupByKey(_.key).agg(agg.toColumn)
+    // a column key, not a lambda: an opaque key appends a copy of every key
+    // and shuffles again at the session partition count, ignoring nReduce
+    mapped(spark, job, map).groupBy($"key").as[String, KeyValue].agg(agg.toColumn)
   }
 
   /** Whole-partition Map variant for closures that need more than a line —
@@ -175,20 +166,19 @@ object MRJob {
       job: JobSpec,
       map: Iterator[String] => Iterator[KeyValue],
       reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
-    reduceStage(
-      readLines(spark, job).mapPartitions(map)(kvEncoder(spark)), job, reduce)
+    reduceStage(readLines(spark, job).mapPartitions(map), job, reduce)
 
   /** Whole-split Map SHAPE — Map receives its split as ONE string, the
     * reference's call shape (`mapreduce.go:143-149` reads the whole split
     * file into memory before calling Map). NOT byte-faithful to the
     * reference: chunk = this partition's lines re-joined with "\n" (CR of
-    * CRLF input and the trailing newline are normalized away), and with
-    * `nMap` pinned the repartition makes a chunk a round-robin line
-    * subset, not a contiguous byte range. For Maps that decompose per
-    * line, all such chunkings are observably identical (SURVEY §2.3.4 —
-    * pinned across nMap values by WordCountSpec); a Map that is sensitive
-    * to CRLF bytes, line adjacency, or chunk contiguity needs a custom
-    * byte-range input format instead (docs/NEXT.md).
+    * CRLF input and the trailing newline are normalized away). A chunk is
+    * a contiguous run of lines ([[readLines]]' byte-range splits), but its
+    * boundaries are Hadoop's split points, not the reference's `nchunk`
+    * cuts. For Maps that decompose per line, all such chunkings are
+    * observably identical (SURVEY §2.3.4 — pinned across nMap values by
+    * WordCountSpec); a Map that is sensitive to CRLF bytes or to where the
+    * chunks are cut needs [[runWholeSplitContiguous]] instead.
     */
   def runWholeSplit(
       spark: SparkSession,
@@ -295,32 +285,29 @@ object MRJob {
       spark: SparkSession,
       job: JobSpec,
       map: String => IterableOnce[KeyValue],
-      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] = {
-    import spark.implicits._
+      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
     reduceStage(
-      splitChunks(spark, job).flatMap { case (_, text) => map(text) },
-      job, reduce)
-  }
+      splitChunks(spark, job).flatMap { case (_, text) => map(text) }, job, reduce)
 
   /** The reference's output contract (SURVEY §2.3.1): lines `key\tvalue`,
     * ascending bytewise key order, one file (`mapreduce.go:251-263`).
     *
-    * `singleFile = true` reproduces it exactly (`orderBy` then `coalesce(1)`)
-    * — correct, but a deliberate scale bottleneck, so it is opt-in.
-    * `singleFile = false` writes a globally-sorted *directory*: `orderBy` is
-    * a range-partitioned sort, so concatenating part files in name order
-    * yields the same total order — the form that works at 100 TB.
+    * `singleFile = true` reproduces it exactly: one shuffle into a single
+    * partition, then a sort within it — no range-sampling job, so the
+    * result is evaluated once. Correct, but a deliberate scale bottleneck,
+    * so it is opt-in. `singleFile = false` writes a globally-sorted
+    * *directory*: `orderBy` is a range-partitioned sort, so concatenating
+    * part files in name order yields the same total order — the form that
+    * works at 100 TB.
     */
   def writeSortedTsv(
       result: Dataset[KeyValue],
       outputPath: String,
       singleFile: Boolean = false): Unit = {
-    val spark = result.sparkSession
-    import spark.implicits._
-    val sorted = result
-      .orderBy($"key")
-      .select(concat_ws("\t", $"key", $"value").as("value"))
-    (if (singleFile) sorted.coalesce(1) else sorted).write
+    val sorted =
+      if (singleFile) result.repartition(1).sortWithinPartitions("key")
+      else result.orderBy("key")
+    sorted.select(concat_ws("\t", col("key"), col("value")).as("value")).write
       .mode("overwrite")
       .text(outputPath)
   }

@@ -14,15 +14,16 @@ package graft.mr
   * preserving the reference's property that sequential and distributed mode
   * share operator code and differ only in the driver (`mapreduce.go:288-301`
   * vs `master.go:156-174`; SURVEY §4.2). Optional trailing args pin
-  * nMap/nReduce like `Job{NMap, NReduce}` (`job.go:5-11`); defaults let
-  * Spark/AQE choose, which is the right call at scale.
+  * nMap/nReduce like `Job{NMap, NReduce}` (`job.go:5-11`); defaults (or 0)
+  * let Spark/AQE choose, which is the right call at scale. Other arguments
+  * print the usage and exit 2.
   */
 object WcMain {
   def main(args: Array[String]): Unit = args.toList match {
-    case "sequential" :: in :: out :: rest =>
-      run("local[*]", in, out, rest)
-    case "submit" :: master :: in :: out :: rest =>
-      run(master, in, out, rest)
+    case "sequential" :: in :: out :: Pins(nMap, nReduce) =>
+      run("local[*]", in, out, nMap, nReduce)
+    case "submit" :: master :: in :: out :: Pins(nMap, nReduce) =>
+      run(master, in, out, nMap, nReduce)
     case _ =>
       System.err.println(
         """usage: WcMain sequential <input> <outputDir> [nMap [nReduce]]
@@ -30,13 +31,21 @@ object WcMain {
       sys.exit(2)
   }
 
-  private def run(master: String, in: String, out: String, rest: List[String]): Unit = {
-    val nMap = rest.headOption.map(_.toInt).getOrElse(0)
-    val nReduce = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
+  /** `[nMap [nReduce]]`: at most two non-negative integers, missing = 0. */
+  private[mr] object Pins {
+    def unapply(rest: List[String]): Option[(Int, Int)] =
+      rest.map(_.toIntOption.filter(_ >= 0)) match {
+        case Nil => Some((0, 0))
+        case Some(m) :: Nil => Some((m, 0))
+        case Some(m) :: Some(r) :: Nil => Some((m, r))
+        case _ => None
+      }
+  }
+
+  private def run(master: String, in: String, out: String, nMap: Int, nReduce: Int): Unit = {
     val spark = graft.GraftSession.builder(master).appName("graft-wc").getOrCreate()
     try {
-      val job = JobSpec(in, out, nMap = nMap, nReduce = nReduce)
-      MRJob.runSequential(spark, job, WordCount.mapFn, WordCount.reduceFn)
+      MRJob.runSequential(spark, JobSpec(in, out, nMap, nReduce), WordCount.mapFn, WordCount.reduceFn)
       println(s"wordcount: $in -> $out")
     } finally spark.stop()
   }

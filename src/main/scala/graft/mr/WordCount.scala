@@ -24,9 +24,12 @@ object WordCount {
   /** Go `unicode.IsLetter` ≈ Java regex `\p{L}` (any Unicode letter). */
   val TokenSep = "[^\\p{L}]+"
 
+  /** [[TokenSep]] compiled once (`String.split` recompiles it per call). */
+  val TokenPattern: java.util.regex.Pattern = java.util.regex.Pattern.compile(TokenSep)
+
   /** `wc.go:14-26` as a Map slot: tokenize, emit (word, "1"). */
   def mapFn(line: String): IterableOnce[KeyValue] =
-    line.split(TokenSep).iterator.filter(_.nonEmpty).map(KeyValue(_, "1"))
+    TokenPattern.split(line).iterator.filter(_.nonEmpty).map(KeyValue(_, "1"))
 
   /** `wc.go:29-38` as a Reduce slot: sum of integer-parsed values. */
   def reduceFn(key: String, values: Iterator[String]): String =

@@ -2,7 +2,12 @@ package graft.mr
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.matchers.should.Matchers
+import org.scalatest.time.SpanSugar._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -189,5 +194,101 @@ class WordCountSpec extends SparkSpec with Matchers {
     withClue(plan) {
       plan.linesIterator.count(_.contains("Exchange hashpartitioning")) shouldBe 1
     }
+  }
+
+  /** The executed plan after AQE's last re-plan ("== Initial Plan ==" and
+    * below repeats the tree as first planned).
+    */
+  private def finalPlan(ds: Dataset[_]): String =
+    ds.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+
+  private def keyShuffles(plan: String): Int =
+    plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
+
+  test("nMap = 0 reads even a small file into one split per core, no shuffle, text-source lines") {
+    // CRLF lines, empty lines, non-ASCII letters, an unterminated last line
+    val text = (1 to 3000).map { i =>
+      if (i % 50 == 0) "" else s"línea $i žluťoučký café" + (if (i % 7 == 0) "\r" else "")
+    }.mkString("\n") + "\nlast line without newline"
+    val in = Files.createTempFile("wc-split", ".txt")
+    Files.writeString(in, text)
+    Files.size(in) should be >= 64L * 1024
+
+    val lines = MRJob.readLines(spark, JobSpec(in.toString, ""))
+    lines.rdd.getNumPartitions should be >= spark.sparkContext.defaultParallelism
+    lines.queryExecution.executedPlan.toString should not include "Exchange"
+    lines.collect().toSeq shouldBe spark.read.textFile(in.toString).collect().toSeq
+
+    // a pinned nMap is exact even where Hadoop cuts one split more than asked
+    val odd = Files.createTempFile("wc-split-odd", ".txt")
+    Files.writeString(odd, "ab cd\nef gh\nij")
+    spark.sparkContext.textFile(odd.toString, 3).getNumPartitions shouldBe 4
+    val pinned = MRJob.readLines(spark, JobSpec(odd.toString, "", nMap = 3))
+    pinned.rdd.getNumPartitions shouldBe 3
+    pinned.collect().toSeq shouldBe Seq("ab cd", "ef gh", "ij")
+  }
+
+  test("holistic reduce with nReduce = 0: one key shuffle, no appended key column") {
+    val in = Files.createTempFile("wc-auto", ".txt")
+    Files.writeString(in, "p q p r q p")
+    val r = WordCount.viaMR(spark, JobSpec(in.toString, ""))
+    r.collect().map(kv => kv.key -> kv.value.toInt).toMap shouldBe
+      Map("p" -> 3, "q" -> 2, "r" -> 1)
+    val plan = finalPlan(r)
+    withClue(plan) {
+      keyShuffles(plan) shouldBe 1
+      plan should not include "AppendColumns"
+    }
+  }
+
+  test("aggregated reduce with nReduce pinned: one shuffle, at nReduce partitions") {
+    import spark.implicits._
+    val in = Files.createTempFile("wc-aggpin", ".txt")
+    Files.writeString(in, "x x y x y z")
+    val r = MRJob.runAggregated(spark, JobSpec(in.toString, "", nReduce = 3),
+      WordCount.mapFn, WordCount.sumAgg)
+    r.collect().toMap shouldBe Map("x" -> 3L, "y" -> 2L, "z" -> 1L)
+    r.rdd.getNumPartitions shouldBe 3
+    val plan = finalPlan(r)
+    withClue(plan)(keyShuffles(plan) shouldBe 1)
+  }
+
+  test("single-file sorted TSV: the write shuffles into one partition, no range sampling") {
+    val text = "the The THE!\ncafé café 123 foo,,bar\n\nfoo9bar end"
+    val in = Files.createTempFile("wc-sink", ".txt")
+    val out = Files.createTempDirectory("wc-sink-out").resolve("res")
+    Files.writeString(in, text)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains(out.toString)) writes.add(plan)
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      WordCount.runFile(spark, in.toString, out.toString, singleFile = true)
+      eventually(timeout(30.seconds))(writes.size shouldBe 1)
+    } finally spark.listenerManager.unregister(listener)
+
+    val plan = writes.peek
+    withClue(plan) {
+      plan should not include "rangepartitioning"
+      plan should include("Exchange SinglePartition")
+    }
+    val files = out.toFile.listFiles.filter(_.getName.startsWith("part-"))
+    files.length shouldBe 1
+    // the golden test's input, so the golden bytes
+    Files.readAllLines(files.head.toPath).toArray.toSeq shouldBe Seq(
+      "THE\t1", "The\t1", "bar\t2", "café\t2", "end\t1", "foo\t2", "the\t1")
+  }
+
+  test("WcMain takes at most two non-negative integer pins") {
+    WcMain.Pins.unapply(Nil) shouldBe Some((0, 0))
+    WcMain.Pins.unapply(List("4")) shouldBe Some((4, 0))
+    WcMain.Pins.unapply(List("0", "3")) shouldBe Some((0, 3))
+    Seq(List("abc"), List("-3"), List("2", "-1"), List("1", "2", "3"), List("1.5"))
+      .foreach(rest => WcMain.Pins.unapply(rest) shouldBe None)
   }
 }
