@@ -479,18 +479,31 @@ object Multimodal {
       found
     }
     private lazy val waveReader: Option[javax.sound.sampled.spi.AudioFileReader] = {
-      // probe with a canonical one-sample WAV from this codec's own writer
-      val sample = encodeWav(Array(0), 8000)
       val it = java.util.ServiceLoader
         .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()
       var found: Option[javax.sound.sampled.spi.AudioFileReader] = None
       while (found.isEmpty && it.hasNext) {
         val r = it.next()
-        if (scala.util.Try(r.getAudioInputStream(
-          new java.io.ByteArrayInputStream(sample))).isSuccess) found = Some(r)
+        if (acceptsWaveProbe(r)) found = Some(r)
       }
       found
     }
+    /** A provider qualifies as [[waveReader]] only if it decodes a
+      * canonical one-sample WAV from this codec's own writer to exactly
+      * that stream — 16-bit mono little-endian signed PCM, one frame. Not
+      * throwing is not enough: a provider that decodes to another layout
+      * would make every [[decodeWav]] fail.
+      */
+    private[graft] def acceptsWaveProbe(
+        r: javax.sound.sampled.spi.AudioFileReader): Boolean =
+      scala.util.Try {
+        val ais = r.getAudioInputStream(
+          new java.io.ByteArrayInputStream(encodeWav(Array(0), 8000)))
+        val f = ais.getFormat
+        f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
+        f.getSampleSizeInBits == 16 && f.getChannels == 1 && !f.isBigEndian &&
+        ais.getFrameLength == 1L
+      }.getOrElse(false)
     def encodeWav(samples: Array[Int], sr: Int): Array[Byte] = {
       val pcm = new Array[Byte](samples.length * 2)
       var i = 0

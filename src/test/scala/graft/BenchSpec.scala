@@ -40,51 +40,12 @@ class BenchSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("post-suite probes: registered, non-self-caching, distinct (a " +
-    "self-caching probe would read a cache-cleared rebuild, not the " +
-    "in-suite anomaly it exists to re-test after the suite)") {
-    val p = Bench.PostProbes
-    p.distinct.size shouldBe p.size
-    for (q <- p) {
-      withClue(s"$q must be registered: ")(
-        SparkEntry.queries.contains(q) shouldBe true)
-      withClue(s"$q must not be self-caching: ")(
-        Bench.selfCaching.contains(q) shouldBe false)
-    }
-  }
-
   test("clearsCache: a subset of selfCaching containing exactly the " +
     "persisted-lineage members (r14 scoped-clear fix — a clearsCache " +
     "entry outside selfCaching would clear caches for a memoized query " +
     "whose pass-2 timing then silently includes rebuild cost)") {
     Bench.clearsCache.subsetOf(Bench.selfCaching) shouldBe true
     Bench.clearsCache shouldBe Set("q_dedup_minhash", "q_dedup_pipeline")
-  }
-
-  test("in-suite strip: the strip query is a registered, non-self-caching " +
-    "basket member (a self-caching strip would pay a cache-cleared rebuild " +
-    "~23 times per run; an unregistered one would silently disable the " +
-    "v3 segment rule)") {
-    SparkEntry.queries.contains(Bench.StripQuery) shouldBe true
-    Bench.selfCaching.contains(Bench.StripQuery) shouldBe false
-    Bench.CanaryBasket.map(_._2) should contain(Bench.StripQuery)
-    Bench.StripEvery should be > 0
-  }
-
-  test("host gauge: emits exactly the five documented fields, and the " +
-    "cumulative PSI totals never run backwards between samples (the " +
-    "per-segment delta arithmetic in tools/adjudicate.py relies on it)") {
-    val g1 = Bench.hostGauge()
-    val g2 = Bench.hostGauge()
-    g1.map(_._1) shouldBe Seq("mem_mb", "load1m", "cpu_stall_us",
-      "mem_stall_us", "io_stall_us")
-    val (m1, m2) = (g1.toMap, g2.toMap)
-    for (k <- Seq("cpu_stall_us", "mem_stall_us", "io_stall_us"))
-      if (m1(k) >= 0 && m2(k) >= 0) m2(k) should be >= m1(k)
-    // every field is -1 (file absent) or a plausible reading — a parse
-    // slip would surface as a garbage magnitude here
-    m1("mem_mb") should be >= -1L
-    m1("load1m") should be >= -1L
   }
 
   test("contract line: the full registry gets the family form (family sums, " +
@@ -118,6 +79,30 @@ class BenchSpec extends AnyFunSuite with Matchers {
       """{"metric":"total","value":3.157,"unit":"sec","queries":""" +
       """{"q_kcore":2.3,"q_median":0.8},"canary":{"q_median":0.812},""" +
       """"sf":"sf0.001"}"""
+  }
+
+  test("detail line: exactly metric, value, unit, queries, build, canary, " +
+    "basket (full-registry runs only), sf, in that order — no retired " +
+    "host-noise field (strip, per-pass maps, task telemetry, host, post)") {
+    import scala.jdk.CollectionConverters._
+    val json = new com.fasterxml.jackson.databind.ObjectMapper
+    def keys(line: String): Seq[String] =
+      json.readTree(line).fieldNames().asScala.toSeq
+    val results = Seq("q_kcore" -> 2.345, "q_median" -> 0.812)
+    val builds = Seq("q_kcore" -> 0.25)
+    val basket = Bench.CanaryBasket.map { case (k, _) => k -> 0.5 }
+    keys(Bench.detailLine(3.407, results, builds, Some(0.812), basket,
+      "/data/sf0.1")) shouldBe
+      Seq("metric", "value", "unit", "queries", "build", "canary", "basket", "sf")
+    val focused = Bench.detailLine(3.407, results, builds, Some(0.812),
+      Seq.empty, "/data/sf0.1")
+    keys(focused) shouldBe
+      Seq("metric", "value", "unit", "queries", "build", "canary", "sf")
+    // full names, full precision, the full sf path
+    focused shouldBe
+      """{"metric":"total","value":3.407,"unit":"sec","queries":""" +
+      """{"q_kcore":2.345,"q_median":0.812},"build":{"q_kcore":0.25},""" +
+      """"canary":{"q_median":0.812},"sf":"/data/sf0.1"}"""
   }
 
   test("stage-10 squeeze holds over the live registry's family set") {

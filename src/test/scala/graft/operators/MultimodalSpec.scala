@@ -163,6 +163,31 @@ class MultimodalSpec extends SparkSpec with Matchers {
     back.toSeq shouldBe samples.toSeq
   }
 
+  test("WAVE provider probe: a reader decoding to 8-bit stereo is " +
+    "rejected, the platform WAVE reader is accepted") {
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream,
+      UnsupportedAudioFileException}
+    // decodes anything without throwing, but to the wrong layout
+    val eightBitStereo = new javax.sound.sampled.spi.AudioFileReader {
+      private def no = throw new UnsupportedAudioFileException("fake")
+      def getAudioFileFormat(in: java.io.InputStream): AudioFileFormat = no
+      def getAudioFileFormat(u: java.net.URL): AudioFileFormat = no
+      def getAudioFileFormat(f: java.io.File): AudioFileFormat = no
+      def getAudioInputStream(in: java.io.InputStream): AudioInputStream =
+        new AudioInputStream(new java.io.ByteArrayInputStream(new Array[Byte](2)),
+          new AudioFormat(8000f, 8, 2, true, false), 1L)
+      def getAudioInputStream(u: java.net.URL): AudioInputStream = no
+      def getAudioInputStream(f: java.io.File): AudioInputStream = no
+    }
+    Multimodal.WavIoCodec.acceptsWaveProbe(eightBitStereo) shouldBe false
+    import scala.jdk.CollectionConverters._
+    val platform = java.util.ServiceLoader
+      .load(classOf[javax.sound.sampled.spi.AudioFileReader]).asScala
+      .filter(_.getClass.getName == "com.sun.media.sound.WaveFileReader")
+    platform should have size 1
+    Multimodal.WavIoCodec.acceptsWaveProbe(platform.head) shouldBe true
+  }
+
   test("audio decode stats match a direct formula evaluation (incl. decimation)") {
     val row = Multimodal.qMultimodalAudio(spark, sf())
       .filter(col("media_id") === 5L).head()
