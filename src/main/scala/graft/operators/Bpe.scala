@@ -17,8 +17,8 @@ import graft.tables.Tables
   * word frequency), fuse the most frequent pair everywhere, repeat. Each
   * iteration is one vocabulary-sized Spark job (the corpus is touched ONCE,
   * to build the vocab); the driver holds only the N chosen pairs — the
-  * k-means Lloyd-step shape ([[Similarity]]), memoized per (session,
-  * corpus) like the centroid cache. At 100 TB the vocab table is
+  * k-means Lloyd-step shape ([[Similarity]]), memoized like the centroid
+  * cache. At 100 TB the vocab table is
   * vocabulary-sized (≪ corpus) and each pair-count job shuffles ≤ a few
   * pairs per DISTINCT word — training cost is independent of corpus scale
   * beyond the initial vocab build.
@@ -64,8 +64,8 @@ object Bpe {
 
   private val mergeCache = new SessionMemo[Seq[(String, String)]]()
 
-  /** The ranked merge list for `dir`'s documents corpus — trained once per
-    * (session, corpus), then a driver-held constant.
+  /** The ranked merge list for `dir`'s documents corpus — trained once,
+    * then a driver-held constant.
     *
     * Hybrid train shape: the ONE corpus-scale step (distinct-word counts)
     * is a Spark aggregation, capped to [[BpeVocabCap]] rows by

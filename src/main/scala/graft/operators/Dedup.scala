@@ -330,14 +330,6 @@ object Dedup {
     * 3× per query (round-1 bench: 3.8 s, the suite's second-worst line).
     * At 100 TB the same shape is a signature table materialized to parquet
     * once and joined from.
-    *
-    * Memoized per (session, dir) like [[canonicalComponents]] — previously
-    * each of the three queries persisted its OWN corpus-sized copy for the
-    * session's lifetime (round-5 advisor note). Re-persist guard: Bench
-    * clears the cache between self-caching passes, which unpersists the
-    * memoized frame without evicting the memo entry; marking it again
-    * keeps each measured pass computing signatures exactly once, same as
-    * the pre-memo semantics.
     */
   private val signatureCache = new SessionMemo.PersistedDF
   private def sharedSignatures(s: SparkSession, dir: String): DataFrame =
@@ -679,27 +671,17 @@ object Dedup {
         (a, b) => struct(a.as("src"), b.as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
-  /** Component mapping memoized per (session, corpus dir) and persisted:
-    * [[qDedupClusters]] and [[qDedupKeep]] both need the identical
-    * canonicalEdges → closure construction (~4.6 s of CC scheduling rounds
-    * each, constant in data size), and a production pipeline materializes
-    * the mapping once per corpus anyway — this is that shape in-session.
-    *
-    * Assumes the corpus dir is immutable within a session (true for every
-    * caller here; a dir whose parquet changes mid-session would serve stale
-    * components). Lifecycle: entries for a session are unpersisted and
-    * evicted when that session's SparkContext ends, so a long-lived process
-    * hosting many sessions neither leaks executor storage nor retains
-    * stopped sessions. Concurrency: [[SessionMemo]] — the multi-second
-    * closure runs OUTSIDE the map lock (a first materialization for one
-    * (session, dir) does not block unrelated keys), while concurrent
-    * first calls for the same key still persist exactly once.
+  /** Component mapping, memoized and persisted: [[qDedupClusters]] and
+    * [[qDedupKeep]] both need the identical canonicalEdges → closure
+    * construction (~4.6 s of CC scheduling rounds each, constant in data
+    * size), and a production pipeline materializes the mapping once per
+    * corpus anyway — this is that shape in-session.
     */
-  private val componentCache =
-    new SessionMemo[DataFrame](_.unpersist(blocking = false))
-  private def canonicalComponents(s: SparkSession, dir: String): DataFrame =
+  private val componentCache = new SessionMemo.PersistedDF
+  private[operators] def canonicalComponents(
+      s: SparkSession, dir: String): DataFrame =
     componentCache.getOrElseUpdate(s, dir)(
-      ConnectedComponents.components(canonicalEdges(s, dir)).persist())
+      ConnectedComponents.components(canonicalEdges(s, dir)))
 
   def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
     canonicalComponents(s, dir)
@@ -1383,8 +1365,7 @@ object Dedup {
     * [[qDedupSubstring2P]]'s phase 1, [[qContainmentE2e]]'s discovery
     * stage), and without the persist each of them re-tokenizes, re-hashes,
     * and re-winnows the corpus (the [[sharedSignatures]] /
-    * [[sharedLineRows]] double-evaluation class). Memoized per
-    * (session, dir) with the same re-persist guard.
+    * [[sharedLineRows]] double-evaluation class).
     */
   private val winnowCandCache = new SessionMemo.PersistedDF
   private[graft] def sharedWinnowCandidates(
@@ -1517,9 +1498,7 @@ object Dedup {
     * `q_dedup_lines`: 1.05 → 2.85 canary units, the same
     * double-evaluation class [[sharedSignatures]] fixed for the MinHash
     * family). At 100 TB the same shape is a line-hash table materialized
-    * once and joined from. Memoized per (session, dir) with the same
-    * re-persist guard as [[sharedSignatures]] (Bench's cache clears
-    * unpersist the frame without evicting the memo entry).
+    * once and joined from.
     */
   private val lineRowsCache = new SessionMemo.PersistedDF
   private[graft] def sharedLineRows(s: SparkSession, dir: String): DataFrame =
@@ -1797,10 +1776,10 @@ object Dedup {
   /** (doc_id, fpn, del) over the planted corpus: del marks membership in
     * the content-addressed takedown manifest (broadcast hash join on
     * md5(text) — the manifest is request-scale, thousands of rows at any
-    * corpus size). Memoized per (session, dir): three ledger legs below
-    * consume it, and md5 + norm-fingerprint over the 3N-row planted
-    * corpus must evaluate once, not three times (Spark shares no
-    * uncached subtrees — the q_dedup_lines round-6 lesson).
+    * corpus size). Persisted: three ledger legs below consume it, and
+    * md5 + norm-fingerprint over the 3N-row planted corpus must evaluate
+    * once, not three times (Spark shares no uncached subtrees — the
+    * q_dedup_lines round-6 lesson).
     */
   private val markedErasureCache = new SessionMemo.PersistedDF
   private def markedErasure(s: SparkSession, dir: String): DataFrame =

@@ -362,11 +362,10 @@ object Graph {
   private val lpaMemo = new SessionMemo[DataFrame]()
 
   /** (id, lbl) after [[LpaIters]] synchronous rounds — the LPA loop of
-    * [[qLpa]]'s scaladoc, memoized per (session, corpus) like the k-means
-    * centroids: the iterative build runs once and both the census and the
-    * [[qModularity]] quality readout reuse the checkpointed assignment
-    * (at 100 TB: the community table is materialized once and joined
-    * from).
+    * [[qLpa]]'s scaladoc, memoized: the iterative build runs once and
+    * both the census and the [[qModularity]] quality readout reuse the
+    * checkpointed assignment (at 100 TB: the community table is
+    * materialized once and joined from).
     */
   private[operators] def lpaLabels(s: SparkSession, dir: String): DataFrame =
     lpaMemo.getOrElseUpdate(s, dir) {

@@ -3,36 +3,38 @@ package graft.operators
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Per-(session, corpus-dir) memoizer for expensive one-time
-  * constructions (the CC closure, k-means centroid training). The global
-  * lock guards ONLY map access; the computation runs outside it in a
-  * per-entry lazy holder, so a multi-second first materialization for
-  * one (session, dir) no longer blocks unrelated sessions/dirs — while
-  * concurrent first calls for the SAME key still compute exactly once
-  * (the holder's own monitor), so a persisted copy cannot be stranded by
-  * a double evaluation. A thunk that THROWS is not cached: the lazy
-  * holder re-evaluates on the next call (Scala lazy-val semantics), so a
-  * transient failure does not poison the cache.
+/** The one reuse mechanism for expensive per-corpus constructions (the
+  * CC closure, k-means centroids, persisted corpus-sized intermediates,
+  * fixture files). Three rules:
   *
-  * Lifecycle: entries for a session are evicted when that session's
-  * SparkContext ends, running `cleanup` (e.g. unpersist) for entries
-  * that actually materialized — never for ones still pending, whose
-  * eventual value dies with the context anyway.
+  *  1. **Key = (session, dir, content).** An entry is reused only by the
+  *     session that built it, for the same corpus dir, while the dir's
+  *     [[SessionMemo.fingerprint]] (every file's path, size and mtime) is
+  *     unchanged. The fingerprint is taken before the thunk runs and is
+  *     not counted in [[SessionMemo.buildNanos]].
+  *  2. **Stale entries are evicted with cleanup.** A call that sees a
+  *     different fingerprint drops the old entry, runs `cleanup` on it
+  *     (e.g. unpersist) if it had materialized, and rebuilds. Entries for
+  *     a session are likewise cleaned up when its SparkContext ends.
+  *  3. **Fixtures live under `tmpdir/<family>/<appId>/<corpus>`**
+  *     ([[SessionMemo.fixture]]), so two JVMs on one corpus never
+  *     overwrite each other's files; sibling appId dirs untouched for
+  *     [[SessionMemo.TmpSiblingTtlMs]] are swept.
+  *
+  * The global lock guards only map access; the thunk runs outside it in
+  * a per-entry lazy holder, so a long first build for one key does not
+  * block other keys, while concurrent first calls for the same key still
+  * compute exactly once. A thunk that throws is not cached: the holder
+  * re-evaluates on the next call.
   */
 private[graft] object SessionMemo {
 
-  /** The memoize+persist idiom shared by every corpus-sized intermediate
-    * that multiple registry queries consume (the MinHash signature table,
-    * the winnowed candidate probe, the line-hash rows, the postings
-    * table, …): memoize per (session, corpus), persist on first build,
-    * and RE-MARK persisted when a later caller finds the storage level
-    * cleared — Bench's between-pass `spark.catalog.clearCache()`
-    * unpersists the frame WITHOUT evicting the memo entry, and without
-    * the re-mark every subsequent consumer would silently recompute the
-    * whole upstream pipeline per reference (the round-1 sharedSignatures
-    * double-evaluation lesson). Extracted in round 12: the idiom had
-    * grown seven hand-rolled copies (round-11 verdict item 3 /
-    * docs/NEXT.md items 5-6), each a divergence bug waiting to happen.
+  /** Memoize + persist for corpus-sized frames that several registry
+    * queries consume: persist on first build, and RE-MARK persisted when a
+    * later caller finds the storage level cleared — Bench's between-pass
+    * `spark.catalog.clearCache()` unpersists the frame without evicting
+    * the memo entry, and without the re-mark every later consumer would
+    * recompute the whole upstream pipeline per reference.
     */
   private[graft] final class PersistedDF {
     private val memo = new SessionMemo[org.apache.spark.sql.DataFrame](
@@ -48,20 +50,80 @@ private[graft] object SessionMemo {
   }
 
   /** Content fingerprint of a file or directory tree: every file's path,
-    * size and mtime, sorted. A rewrite at the same path changes it, so
-    * reuse keyed on it cannot read stages built from the old contents.
+    * size and mtime, sorted ("" for a path that does not exist). A
+    * rewrite at the same path changes it. Walks `listStatus`, not
+    * `listFiles`: the local file system builds a `LocatedFileStatus` by
+    * forking `ls` for each file's permissions (~4 ms a file).
     */
-  private[graft] def fingerprint(s: SparkSession, path: String): String = {
+  private def fingerprint(s: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .listFiles(p, true)
-    val out = Seq.newBuilder[String]
-    while (files.hasNext) {
-      val f = files.next()
-      out += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
-    }
-    out.result().sorted.mkString("|")
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def walk(q: org.apache.hadoop.fs.Path): Seq[String] =
+      fs.listStatus(q).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else Seq(s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      }
+    if (fs.exists(p)) walk(p).sorted.mkString("|") else ""
   }
+
+  /** Sibling appId dirs of a fixture family whose mtime is older than
+    * this are deleted on first use. Every reuse re-touches its own appId
+    * dir, and a full bench pass cycle is minutes, so a live session is
+    * never swept.
+    */
+  private val TmpSiblingTtlMs: Long = 24L * 3600 * 1000
+
+  /** `tmpdir/<family>/<appId>/<corpus>` for `dir` (`<corpus>` = the dir's
+    * name plus a hash of its absolute path), after a best-effort
+    * sweep of stale sibling appId dirs (a failure is reported on stderr,
+    * never thrown). Not memoized: for artifacts rewritten on every query.
+    */
+  private[graft] def fixtureDir(
+      s: SparkSession, family: String, dir: String): String = {
+    val root = new java.io.File(
+      s"${System.getProperty("java.io.tmpdir")}/$family")
+    val appId = s.sparkContext.applicationId
+    val cutoff = System.currentTimeMillis() - TmpSiblingTtlMs
+    Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
+      if (f.getName != appId && f.lastModified() < cutoff)
+        try {
+          def rm(x: java.io.File): Unit = {
+            Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
+            x.delete(); ()
+          }
+          rm(f)
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[graft] tmp sweep of $f failed: $e")
+        }
+    }
+    // the corpus name alone would let two corpora with one basename share
+    // a fixture dir in one session; the path hash keeps them apart
+    val corpus = new java.io.File(dir)
+    s"$root/$appId/${corpus.getName}-" +
+      Integer.toHexString(corpus.getAbsolutePath.hashCode)
+  }
+
+  private val fixtures =
+    scala.collection.concurrent.TrieMap.empty[String, SessionMemo[String]]
+
+  /** A fixture written once per (session, dir, content) by `write` into
+    * [[fixtureDir]]; returns its path. Every call re-touches the appId
+    * dir so a concurrently started JVM's sweep sees it live.
+    */
+  private[graft] def fixture(s: SparkSession, family: String, dir: String)(
+      write: String => Unit): String = {
+    val out = fixtures.getOrElseUpdate(family, new SessionMemo[String]())
+      .getOrElseUpdate(s, dir) {
+        val out = fixtureDir(s, family, dir)
+        write(out)
+        out
+      }
+    new java.io.File(out).getParentFile.setLastModified(
+      System.currentTimeMillis())
+    out
+  }
+
   // Wall nanos spent INSIDE memo thunks, outermost only (a thunk that
   // triggers another memo's build counts once). graft.Bench reads deltas
   // around query construction to attribute the "build" column to actual
@@ -88,7 +150,7 @@ private[graft] object SessionMemo {
 
 private[graft] final class SessionMemo[V](cleanup: V => Unit = (_: V) => ()) {
 
-  private final class Holder(thunk: () => V) {
+  private final class Holder(val fp: String, thunk: () => V) {
     @volatile var done = false
     lazy val value: V = { val v = SessionMemo.timed(thunk); done = true; v }
   }
@@ -97,30 +159,35 @@ private[graft] final class SessionMemo[V](cleanup: V => Unit = (_: V) => ()) {
     scala.collection.mutable.Map.empty[(SparkSession, String), Holder]
 
   def getOrElseUpdate(s: SparkSession, key: String)(thunk: => V): V = {
-    val holder = cache.synchronized {
-      cache.getOrElseUpdate((s, key), {
-        if (!cache.keys.exists(_._1 eq s))
-          s.sparkContext.addSparkListener(new SparkListener {
-            override def onApplicationEnd(
-                e: SparkListenerApplicationEnd): Unit =
-              cache.synchronized {
-                cache.filterInPlace { case ((sess, _), h) =>
-                  (sess ne s) || {
-                    // executor storage dies with the context anyway;
-                    // cleanup is for the shared-context multi-session
-                    // case and may race the shutdown, so a failure here
-                    // is ignorable
-                    if (h.done)
-                      try cleanup(h.value)
-                      catch { case _: Throwable => () }
-                    false
-                  }
+    val fp = SessionMemo.fingerprint(s, key)
+    val (holder, stale) = cache.synchronized {
+      if (!cache.keys.exists(_._1 eq s))
+        s.sparkContext.addSparkListener(new SparkListener {
+          override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+            cache.synchronized {
+              cache.filterInPlace { case ((sess, _), h) =>
+                (sess ne s) || {
+                  // executor storage dies with the context anyway;
+                  // cleanup is for the shared-context multi-session
+                  // case and may race the shutdown, so a failure here
+                  // is ignorable
+                  if (h.done)
+                    try cleanup(h.value)
+                    catch { case _: Throwable => () }
+                  false
                 }
               }
-          })
-        new Holder(() => thunk)
-      })
+            }
+        })
+      cache.get((s, key)) match {
+        case Some(h) if h.fp == fp => (h, None)
+        case old =>
+          val h = new Holder(fp, () => thunk)
+          cache((s, key)) = h
+          (h, old.filter(_.done))
+      }
     }
+    stale.foreach(h => cleanup(h.value))
     holder.value
   }
 }

@@ -451,12 +451,11 @@ object Similarity {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  /** Root for the persisted IVF index (under java.io.tmpdir; one directory
-    * per source dataset, rebuilt idempotently with mode=overwrite).
+  /** Root for the persisted IVF index: a session-scoped fixture dir,
+    * rewritten idempotently (mode=overwrite) by every query.
     */
-  private def ivfIndexPath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index/" +
-      new java.io.File(dir).getName
+  private[graft] def ivfIndexPath(s: SparkSession, dir: String): String =
+    SessionMemo.fixtureDir(s, "graft_ivf_index", dir)
 
   /** IVF with a PERSISTED index — the design the inline [[qAnnIvf]] only
     * promises: the one-time index build writes the assignment partitioned
@@ -473,7 +472,7 @@ object Similarity {
   def qAnnIvfIndex(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val cent = standInCentroids(emb)
-    val path = ivfIndexPath(dir)
+    val path = ivfIndexPath(s, dir)
 
     // index build (idempotent overwrite): row-local assignment, written
     // clustered by c_id — the partition layout IS the inverted list
@@ -564,19 +563,14 @@ object Similarity {
     }.sortBy(_._1)
   }
 
-  /** Trained centroids memoized per (session, corpus dir): the seeded
-    * k-means training (init scan + [[KmeansIters]] Lloyd scans) is a
-    * one-time index-build cost that [[qAnnIvfKmeans]], [[qAnnRecallIvf]]
-    * and [[qDedupSemantic]] all need for the SAME corpus — a production
-    * pipeline trains once and reuses the centroid table. The values are
-    * k·Dim doubles (bounded, driver-side); entries are evicted when their
-    * session's SparkContext ends so a long-lived multi-session process
-    * does not retain stopped sessions (same lifecycle pattern as
-    * Dedup.componentCache). Training is deterministic in the corpus, so
+  /** Trained centroids, memoized: the seeded k-means training (init
+    * scan + [[KmeansIters]] Lloyd scans) is a one-time index-build cost
+    * that [[qAnnIvfKmeans]], [[qAnnRecallIvf]] and [[qDedupSemantic]] all
+    * need for the SAME corpus — a production pipeline trains once and
+    * reuses the centroid table. The values are k·Dim doubles (bounded,
+    * driver-side). Training is deterministic in the corpus, so
     * memoization is invisible to results (SimilaritySpec pins run-to-run
-    * equality). Assumes the dir's parquet is immutable in-session.
-    * Concurrency: [[SessionMemo]] — training runs outside the map lock,
-    * so it no longer blocks unrelated sessions/dirs.
+    * equality).
     */
   private val centroidCache = new SessionMemo[Seq[(Long, Array[Double])]]()
   private[operators] def trainedCentroids(
@@ -589,10 +583,9 @@ object Similarity {
   /** The shared k-means seed: the [[IvfCentroids]] md5-ordered vectors,
     * quantized — the SAME rows seed the full-dim IVF training and every
     * PQ subspace (the subspace seed is a slice, and slice∘quantize ≡
-    * quantize∘slice elementwise), so the collect runs once per
-    * (session, corpus) instead of once per training (r15). Consumers
-    * never mutate the arrays (Lloyd steps build fresh ones; assignment
-    * reads them as literals).
+    * quantize∘slice elementwise), so the collect runs once instead of
+    * once per training (r15). Consumers never mutate the arrays (Lloyd
+    * steps build fresh ones; assignment reads them as literals).
     */
   private val seedCache = new SessionMemo[Seq[(Long, Array[Double])]]()
   private def seedRows(
@@ -691,8 +684,8 @@ object Similarity {
 
   /** Per-subspace codebooks (spherical PQ: the same seeded cosine
     * k-means as [[trainedCentroids]], run independently on each
-    * coordinate slice). Memoized like the IVF centroids — a production
-    * pipeline trains the codebook once per corpus.
+    * coordinate slice) — a production pipeline trains the codebook once
+    * per corpus.
     */
   private val pqCache = new SessionMemo[Seq[Seq[(Long, Array[Double])]]]()
   private[operators] def pqCodebooks(
@@ -1245,8 +1238,7 @@ object Similarity {
     * LEAST similar to everything selected so far" — each round is ONE
     * corpus pass computing max-cosine-to-selected row-locally against the
     * ≤[[CoresetK]] broadcast-literal centers, then a TakeOrdered of a
-    * single row (min max-sim, vec_id tiebreak). Memoized per (session,
-    * corpus) like [[trainedCentroids]]: selection is a one-time
+    * single row (min max-sim, vec_id tiebreak). Selection is a one-time
     * index-build; determinism pinned in DeterminismSpec. Centers are
     * stored quantized (×1e7 floor-rounded integers carried as doubles,
     * the [[quantLong]] convention) so the literal-vs-raw cosine matches

@@ -348,11 +348,10 @@ object SqlSurface {
   def qSqlPipelineWide(s: SparkSession, dir: String): DataFrame =
     sqlPipeline(s, dir, Dedup.WideRowsPerBand, dfKill = true, variant = "w_")
 
-  /** Per session and variant-free stage table: the fingerprint of the
-    * `documents.parquet` the table was last built from in that session.
+  /** Present per (session, dir, content) once that session built the
+    * variant-free stage tables from that corpus content.
     */
-  private val sharedStages =
-    new SessionMemo[java.util.concurrent.atomic.AtomicReference[String]]()
+  private val variantFreeBuilt = new SessionMemo[Unit]()
 
   private def sqlPipeline(
       s: SparkSession, dir: String,
@@ -383,27 +382,15 @@ object SqlSurface {
     // pipeline variants — they diverge only at the kill + band geometry
     // — so they live under variant-FREE names. The DEFAULT pipeline
     // always rebuilds them (its measured pass stays the full
-    // gate→clean→shingle build); a VARIANT invocation that finds them
-    // already built in this session scans them instead of re-deriving
-    // the whole chain (same dir-tagged name ⇒ same deterministic
-    // content — the tables are pure functions of the corpus). Reuse
-    // requires that THIS session built the table from the SAME
-    // documents.parquet contents (file names, sizes, mtimes): a corpus
-    // rewritten at the same path rebuilds instead of reading stale
-    // stages. In the bench's sorted order the default pipeline rebuilds
-    // them moments before the wide variant runs, so every pass still pays
-    // the shared build exactly once, inside a timed window.
+    // gate→clean→shingle build); a VARIANT invocation scans them instead
+    // of re-deriving the whole chain when [[variantFreeBuilt]] says THIS
+    // session built them from the SAME corpus contents (the memo is
+    // content-keyed: a corpus rewritten at the same path rebuilds) and
+    // the tables still exist. In the bench's sorted order the default
+    // pipeline rebuilds them moments before the wide variant runs, so
+    // every pass still pays the shared build exactly once, inside a
+    // timed window.
     def st(name: String): String = plTable(dir, name)
-    val corpusFp = SessionMemo.fingerprint(s, s"$dir/documents.parquet")
-    def matShared(table: String, query: String): Unit = {
-      val built = sharedStages.getOrElseUpdate(s, table)(
-        new java.util.concurrent.atomic.AtomicReference[String])
-      if (variant.isEmpty || built.get != corpusFp ||
-          !s.catalog.tableExists(table)) {
-        mat(table, query)
-        built.set(corpusFp)
-      } else if (profile) println(s"## pl $variant${table.take(24)} (reused)")
-    }
     s.sql(
       s"""CREATE OR REPLACE TEMPORARY VIEW ${st("corpus")} AS
          |SELECT doc_id, text FROM parquet.`$dir/documents.parquet`
@@ -411,9 +398,6 @@ object SqlSurface {
          |SELECT doc_id + ${Dedup.PlantOffset} AS doc_id,
          |  text || '${Dedup.Tail}' AS text
          |FROM parquet.`$dir/documents.parquet`""".stripMargin)
-    matShared(st("gate"),
-      s"""WITH ${gopherCtesSql(st("corpus"))}
-         |SELECT doc_id, keep FROM gmet""".stripMargin)
     // gate → boilerplate line-clean → collected shingle sets per doc,
     // ending in `hs(doc_id, hs)` — shared by both signature routes
     val cleanedHsCtes =
@@ -447,10 +431,21 @@ object SqlSurface {
     // CTE would re-run the whole tokenize→shingle pipeline per
     // reference — Spark shares no uncached subtrees), and BOTH variants'
     // signature stages read it, so one build serves the pair
-    matShared(st("shs"),
-      s"""WITH $cleanedHsCtes,
-         |${hsCteSql("cleaned")}
-         |SELECT doc_id, hs FROM hs""".stripMargin)
+    val shared = Seq(
+      st("gate") ->
+        s"""WITH ${gopherCtesSql(st("corpus"))}
+           |SELECT doc_id, keep FROM gmet""".stripMargin,
+      st("shs") ->
+        s"""WITH $cleanedHsCtes,
+           |${hsCteSql("cleaned")}
+           |SELECT doc_id, hs FROM hs""".stripMargin)
+    def matShared(): Unit = shared.foreach { case (t, q) => mat(t, q) }
+    var built = false
+    variantFreeBuilt.getOrElseUpdate(s, dir) { matShared(); built = true }
+    if (!built && (variant.isEmpty ||
+        !shared.forall(t => s.catalog.tableExists(t._1))))
+      matShared()
+    else if (!built && profile) println(s"## pl $variant shared (reused)")
     if (!dfKill)
       mat(pt("sig"),
         s"""SELECT doc_id, hs,

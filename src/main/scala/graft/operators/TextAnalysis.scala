@@ -1012,8 +1012,7 @@ object TextAnalysis {
     aggregate(col("ss"), lit(0L),
       (a, b) => a + element_at(wlit, (b + 1).cast("int")))
 
-  /** Train [[QtRounds]] pocket-perceptron rounds; memoized per
-    * (session, dir) like the k-means centroids — the weight vector is
+  /** Train [[QtRounds]] pocket-perceptron rounds — the weight vector is
     * the model artifact, the frames it was trained from hold no state.
     * Round t: err(w) counted exactly (pred = m > 0); strictly-smaller
     * error pockets a copy (earliest minimal round wins ties — the

@@ -93,9 +93,9 @@ object Scale {
   // -------------------------------------------------------------------
 
   /** One bucketed write per (session, corpus): both fact tables land in
-    * the session catalog bucketed by their orderkey. Memoized like the
-    * k-means centroids — the write-once cost the bucketing trade is ABOUT
-    * is paid once and reported in the bench "build" column.
+    * the session catalog bucketed by their orderkey — the write-once cost
+    * the bucketing trade is ABOUT is paid once and reported in the bench
+    * "build" column.
     */
   private val bucketMemo = new SessionMemo[(String, String)]()
 
@@ -616,74 +616,20 @@ object Scale {
     */
   val ZWriteFiles = 16
 
-  private val zorderWriteMemo = new SessionMemo[String]()
-
-  /** Per-JVM tmp path for rewrite-in-place fixture artifacts (the Z-order
-    * dual layout, the MV+IVM lake): `tmpdir/<family>/<appId>/<corpus>`.
-    * The appId component keeps two concurrent JVMs on the same box (a
-    * forked test suite and a bench run) from overwriting each other's
-    * files mid-read — overwrite-on-first-use only protects within one
-    * session (round-12 advisor note). Warehouse-managed tables get the
-    * same isolation from the session warehouse dir itself.
-    *
-    * Growth bound: appId dirs would otherwise accumulate one
-    * lineitem-scale artifact per JVM forever, so stale SIBLING dirs
-    * (mtime older than [[TmpSiblingTtlMs]]) are best-effort deleted on
-    * first use. "Live" is kept true two ways (round-13 advisor low 1:
-    * the write-time mtime alone goes stale in a session that outlives
-    * the TTL): every memoized REUSE of a fixture re-touches its appId
-    * dir's mtime ([[touchJvmTmp]]), and the TTL itself is 24 h — far
-    * above the longest plausible idle gap between two reuses in one
-    * session (a full bench pass cycle is minutes).
-    */
-  private[scale] val TmpSiblingTtlMs: Long = 24L * 3600 * 1000
-
-  /** Refresh the appId dir's mtime for a [[jvmTmpPath]]-family artifact
-    * (`path` = `tmpdir/<family>/<appId>/<corpus>`) — called on every
-    * memo reuse so a concurrently-started JVM's TTL sweep classifies
-    * this session's fixtures live for as long as they are actually read.
-    */
-  private[scale] def touchJvmTmp(path: String): Unit = {
-    val app = new java.io.File(path).getParentFile
-    if (app != null && app.exists()) {
-      app.setLastModified(System.currentTimeMillis()); ()
-    }
-  }
-
-  private[scale] def jvmTmpPath(
-      s: SparkSession, family: String, dir: String): String = {
-    val root = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/$family")
-    val appId = s.sparkContext.applicationId
-    val cutoff = System.currentTimeMillis() - TmpSiblingTtlMs
-    Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
-      if (f.getName != appId && f.lastModified() < cutoff)
-        try {
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-            x.delete(); ()
-          }
-          rm(f)
-        } catch { case _: Throwable => () } // cleanup is best-effort
-    }
-    s"$root/$appId/${new java.io.File(dir).getName}"
-  }
-
   /** EXECUTED Z-order write — the artifact [[qZorder]] audits, actually
     * written (the Export.writeCompacted discipline): lineitem's (pb, ob)
-    * key plane clustered two ways under `…/graft_zorder/<sf>/`:
+    * key plane clustered two ways under the `graft_zorder` fixture dir:
     * `z/` = repartitionByRange(16, zv).sortWithinPartitions(zv) — the
     * OPTIMIZE ZORDER BY layout; `single/` = the same write keyed by pb
     * alone — the one-dimensional strawman. ZorderWriteSpec reads the
     * parquet ROW-GROUP footers back (ParquetFileReader, not a re-scan)
     * and proves the skipping the audit predicted: a range probe on
     * EITHER dimension prunes most z-layout row groups, while the
-    * single-key layout prunes only on its sort key. Memoized per
-    * (session, corpus); the write cost lands in the bench build column.
+    * single-key layout prunes only on its sort key. The write cost lands
+    * in the bench build column.
     */
-  private[graft] def zorderPath(s: SparkSession, dir: String): String = {
-    val out = zorderWriteMemo.getOrElseUpdate(s, dir) {
-      val out = jvmTmpPath(s, "graft_zorder", dir)
+  private[graft] def zorderPath(s: SparkSession, dir: String): String =
+    SessionMemo.fixture(s, "graft_zorder", dir) { out =>
       val keyed = Tables.lineitem(s, dir).select(
         (col("l_partkey") % ZShards).as("pb"),
         (col("l_orderkey") % ZShards).as("ob"))
@@ -695,11 +641,7 @@ object Scale {
         .repartitionByRange(ZWriteFiles, col("pb"))
         .sortWithinPartitions(col("pb"))
         .write.mode("overwrite").parquet(s"$out/single")
-      out
     }
-    touchJvmTmp(out)
-    out
-  }
 
   /** Range scan over the RE-READ z-clustered table — the gate row over
     * the executed artifact: a 16-wide pb band aggregated per key must
@@ -898,8 +840,8 @@ object Scale {
     * [[graft.plans.MaterializedViews]] matcher registry: the count
     * matcher is structural, the sum matcher's canonical template is
     * captured from an analyzed probe of the SAME cents expression, so
-    * matcher and view column can never drift apart. Memoized per
-    * (session, corpus); the write cost lands in the bench build column.
+    * matcher and view column can never drift apart. The write cost lands
+    * in the bench build column.
     */
   private def mvTable(s: SparkSession, dir: String): String =
     mvMemo.getOrElseUpdate(s, dir) {
@@ -1076,7 +1018,7 @@ object Scale {
       .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"),
         (col("l_shipdate") + expr("INTERVAL 2 DAYS")).as("l_shipdate"))
 
-  private val mvIvmMemo = new SessionMemo[(String, String)]()
+  private val mvIvmMemo = new SessionMemo[String]()
 
   /** One-time fixture for [[qMvIvm]] — returns (updatedBasePath,
     * maintainedViewTable):
@@ -1099,13 +1041,14 @@ object Scale {
     *     updated base, the sumOf discipline).
     */
   private def mvIvmFixture(s: SparkSession, dir: String): (String, String) = {
-    val fixture = mvIvmMemo.getOrElseUpdate(s, dir) {
-      val basePath = jvmTmpPath(s, "graft_mv_ivm", dir)
+    val basePath = SessionMemo.fixture(s, "graft_mv_ivm", dir) { out =>
       Tables.lineitem(s, dir)
         .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"),
           col("l_shipdate"))
         .unionByName(mvIvmDelta(s, dir))
-        .write.mode("overwrite").parquet(basePath)
+        .write.mode("overwrite").parquet(out)
+    }
+    val table = mvIvmMemo.getOrElseUpdate(s, dir) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val t = s"graft_mv_ivm_q15$tag"
       dropWithLocation(s, t)
@@ -1127,10 +1070,9 @@ object Scale {
           .filter(q15Quarter)
           .select(q15RevCbp.as("p"))
           .queryExecution.optimizedPlan)
-      (basePath, t)
+      t
     }
-    touchJvmTmp(fixture._1)
-    fixture
+    (basePath, table)
   }
 
   /** Per-supplier quarter revenue over the UPDATED fact THROUGH the MV
@@ -1222,21 +1164,15 @@ object Scale {
       .orderBy(col("layout"), col("cls"))
   }
 
-  private val dppFixtureMemo = new SessionMemo[String]()
-
   /** One-time DATE-PARTITIONED materialization of the events table
     * (`.../event_date=YYYY-MM-DD/` directory layout — the physical layout
-    * every 100 TB event lake uses). Memoized per (session, corpus) like
-    * the ORC fixture; reported in the bench build column.
+    * every 100 TB event lake uses); reported in the bench build column.
     */
-  private def dppPath(s: SparkSession, dir: String): String =
-    dppFixtureMemo.getOrElseUpdate(s, dir) {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_dpp/" +
-        new java.io.File(dir).getName
+  private[graft] def dppPath(s: SparkSession, dir: String): String =
+    SessionMemo.fixture(s, "graft_dpp", dir) { out =>
       Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date").parquet(out)
-      out
     }
 
   /** Dynamic partition pruning under the gate — the optimization that

@@ -67,15 +67,11 @@ object Ingest {
 
   /** Write the gzip JSONL fixture (one file per md5-bucket shard, lines
     * in doc_id order within a shard — byte-deterministic for a fixed
-    * corpus) and return its path. Memoized per (session, dir): the
-    * fixture is input data, not query state, so Bench cache clears never
-    * need to rebuild it.
+    * corpus) and return its path. The fixture is input data, not query
+    * state, so Bench cache clears never need to rebuild it.
     */
-  private val fixtureMemo = new SessionMemo[String]()
   private[graft] def fixturePath(s: SparkSession, dir: String): String =
-    fixtureMemo.getOrElseUpdate(s, dir) {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_ingest_jsonl/" +
-        new java.io.File(dir).getName
+    SessionMemo.fixture(s, "graft_ingest_jsonl", dir) { out =>
       fixtureLines(s, dir)
         .withColumn("shard",
           graft.operators.Sampling.hashBucket(col("doc_id"), IngestShards))
@@ -86,7 +82,6 @@ object Ingest {
         .partitionBy("shard")
         .option("compression", "gzip")
         .text(out)
-      out
     }
 
   private val IngestSchema =
@@ -189,11 +184,8 @@ object Ingest {
     * 100 TB one shard feeds many tasks (gzip pins one task per file);
     * having both arrival modes under the gate covers both scan shapes.
     */
-  private val csvFixtureMemo = new SessionMemo[String]()
   private[graft] def csvFixturePath(s: SparkSession, dir: String): String =
-    csvFixtureMemo.getOrElseUpdate(s, dir) {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_ingest_csv/" +
-        new java.io.File(dir).getName
+    SessionMemo.fixture(s, "graft_ingest_csv", dir) { out =>
       fixtureLinesCsv(s, dir)
         .withColumn("shard",
           graft.operators.Sampling.hashBucket(col("doc_id"), IngestShards))
@@ -203,7 +195,6 @@ object Ingest {
         .write.mode("overwrite")
         .partitionBy("shard")
         .text(out)
-      out
     }
 
   private val CsvSchema =
@@ -256,11 +247,8 @@ object Ingest {
     * any long-lived ingestion (a producer adds a field mid-stream and the
     * lake must keep reading both vintages).
     */
-  private val evoFixtureMemo = new SessionMemo[String]()
   private[graft] def evoFixturePath(s: SparkSession, dir: String): String =
-    evoFixtureMemo.getOrElseUpdate(s, dir) {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_schema_evo/" +
-        new java.io.File(dir).getName
+    SessionMemo.fixture(s, "graft_schema_evo", dir) { out =>
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("source"))
@@ -268,7 +256,6 @@ object Ingest {
       docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("source"), col("lang"))
         .write.mode("overwrite").parquet(s"$out/v=2")
-      out
     }
 
   /** Schema-merged read across parquet vintages: `mergeSchema=true`
@@ -321,15 +308,10 @@ object Ingest {
 
   /** Combined fixture for the streaming pipeline: the ingest shards PLUS
     * one re-crawl shard (shard index [[IngestShards]]), one dir so the
-    * file-source stream sees one arriving-crawl directory. Memoized like
-    * [[fixturePath]] (input data, not query state).
+    * file-source stream sees one arriving-crawl directory.
     */
-  private val pipelineFixtureMemo = new SessionMemo[String]()
   private[graft] def pipelineFixturePath(s: SparkSession, dir: String): String =
-    pipelineFixtureMemo.getOrElseUpdate(s, dir) {
-      val out =
-        s"${System.getProperty("java.io.tmpdir")}/graft_ingest_pipeline/" +
-          new java.io.File(dir).getName
+    SessionMemo.fixture(s, "graft_ingest_pipeline", dir) { out =>
       val base = fixtureLines(s, dir)
         .withColumn("shard",
           graft.operators.Sampling.hashBucket(col("doc_id"), IngestShards))
@@ -345,7 +327,6 @@ object Ingest {
         .partitionBy("shard")
         .option("compression", "gzip")
         .text(out)
-      out
     }
 
   /** A first-claim decision for one ingested document. */
@@ -588,22 +569,16 @@ object Ingest {
       .orderBy(col("epoch"))
   }
 
-  private val orcFixtureMemo = new SessionMemo[String]()
-
   /** One-time ORC materialization of the lineitem projection — the
     * columnar-format interchange a heterogeneous lake forces (ORC readers
-    * upstream, parquet downstream). Memoized per (session, corpus) like
-    * every fixture write; reported in the bench build column.
+    * upstream, parquet downstream); reported in the bench build column.
     */
-  private def orcPath(s: SparkSession, dir: String): String =
-    orcFixtureMemo.getOrElseUpdate(s, dir) {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_orc/" +
-        new java.io.File(dir).getName
+  private[graft] def orcPath(s: SparkSession, dir: String): String =
+    SessionMemo.fixture(s, "graft_orc", dir) { out =>
       Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
         .write.mode("overwrite").orc(out)
-      out
     }
 
   /** ORC round-trip under the gate: the built-in ORC source (write once,

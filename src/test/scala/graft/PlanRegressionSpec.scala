@@ -89,8 +89,7 @@ class PlanRegressionSpec extends SparkSpec with Matchers {
     out.count() should be > 0L
     // the probe-side scan reads the index through a c_id PartitionFilter
     // (reconstruct the probe read the query performs and inspect its scan)
-    val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index/" +
-      new java.io.File(sf()).getName
+    val idx = Similarity.ivfIndexPath(spark, sf())
     val pruned = spark.read.parquet(idx).filter(col("c_id").isin(0L, 1L))
     val scan = formatted(pruned)
     scan should include("PartitionFilters")
