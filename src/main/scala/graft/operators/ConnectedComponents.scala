@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 /** Distributed connected components over an edge list — the transitive-
   * closure step every dedup pipeline needs between "pair evidence" and
@@ -24,40 +23,33 @@ import org.apache.spark.util.LongAccumulator
   *   - the rounds run through [[Iterate]], whose `localCheckpoint` after
   *     every round truncates lineage (an iterative plan otherwise
   *     re-executes all prior rounds on every action);
-  *   - convergence is the paper's CHANGE COUNT, carried by a
-  *     LongAccumulator updated inside the round's own materialization:
-  *     each star aggregation tags every emitted edge that differs from its
-  *     input form (large-star: the group rewired to a center other than
-  *     itself; small-star: a non-self node re-attached), so ONE action per
-  *     round both materializes the next edge set and reports whether
-  *     anything moved. Zero changes ⇔ the round was an identity ⇔ the edge
-  *     set is a star forest (a non-star-forest always rewires: a node with
-  *     two centers is re-pointed by small-star, a child-and-center by
-  *     large-star), and each star's center is then its component minimum.
-  *     Task retries can only over-count an accumulator, never under-count,
-  *     so a spurious nonzero costs one extra round and a premature
-  *     convergence is impossible. The earlier structural check detected the
-  *     fixpoint without the confirming round but spent an extra aggregation
-  *     job per round — the accumulator trades one cheap tail round for two
-  *     fewer stages in every round;
+  *   - convergence is the paper's CHANGE COUNT: each star aggregation
+  *     tags every emitted edge that differs from its input form
+  *     (large-star: the group rewired to a center other than itself;
+  *     small-star: a non-self node re-attached), and an `observe()` sum of
+  *     those tags on each star's output rides the round's checkpoint, so
+  *     ONE action per round both materializes the next edge set and
+  *     reports whether anything moved. Zero changes ⇔ the round was an
+  *     identity ⇔ the edge set is a star forest (a non-star-forest always
+  *     rewires: a node with two centers is re-pointed by small-star, a
+  *     child-and-center by large-star), whose centers are the component
+  *     minima. The price is one confirming round; a structural fixpoint
+  *     check would spend an extra aggregation job in every round;
   *   - per-node neighbor lists are bounded by the star-contraction itself:
   *     large-star attaches big neighbors to the local min, so no node
   *     accumulates an unbounded adjacency (the paper's Thm 2).
   */
 object ConnectedComponents {
 
-  /** Pipe (src, dst, chg) rows through `acc`, dropping the flag — the
-    * counting runs inside whatever job materializes the returned frame, so
-    * convergence detection costs no extra action.
+  /** One large-star + small-star round over `edges`, and the observations
+    * of each star's number of `chg` tags, read once the round is
+    * materialized — the counting costs no extra action.
     */
-  private[operators] def countChanges(flagged: DataFrame, acc: LongAccumulator): DataFrame = {
-    val spark = flagged.sparkSession
-    import spark.implicits._
-    flagged.as[(Long, Long, Boolean)]
-      .mapPartitions { it =>
-        it.map { case (s, d, chg) => if (chg) acc.add(1L); (s, d) }
-      }
-      .toDF("src", "dst")
+  private[operators] def starRound(edges: DataFrame): (DataFrame, Seq[Observation]) = {
+    val changes = Seq.fill(2)(new Observation())
+    def observed(flagged: DataFrame, star: Int): DataFrame = flagged
+      .observe(changes(star), count_if(col("chg")).as("chg")).select(col("src"), col("dst"))
+    (observed(smallStar(observed(largeStar(edges), 0)), 1), changes)
   }
 
   /** Large-Star: for each node u (over symmetrized edges), connect every
@@ -108,12 +100,11 @@ object ConnectedComponents {
     * includes the one confirming round that observes zero changes).
     */
   def componentsWithStats(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    val changes = edges.sparkSession.sparkContext.longAccumulator("cc-changes")
+    var changes = Seq.empty[Observation]
     // done ⇔ the round changed nothing ⇔ its output is a star forest
     val cc = Iterate(
         edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")).distinct(),
-        maxIter, _ => changes.value == 0L) { e =>
-      changes.reset()
+        maxIter, (_, _) => changes.forall(_.get("chg") == 0L)) { e =>
       // NO per-round distinct: the next round's large-star symmetrizes and
       // collect_set-dedups its input anyway, so an inter-round distinct is
       // a third full shuffle per round that redoes work the next
@@ -121,7 +112,7 @@ object ConnectedComponents {
       // different small-star groups ride along (multiplicity is bounded by
       // the emitting group count and collapses at the next aggregation —
       // it cannot compound across rounds) and may disagree on chg; the
-      // accumulator only feeds a zero/nonzero decision, so over-count is
+      // change sum only feeds a zero/nonzero decision, so over-count is
       // harmless. Worst-case duplication of the checkpointed frame: a pair
       // (v, m) is emitted once per emitting group, i.e. at most once per
       // common neighbor of v and m — on an adversarially dense graph the
@@ -130,8 +121,8 @@ object ConnectedComponents {
       // trades bounded transient storage for a full shuffle per round.
       // Each round is exactly TWO shuffles: the large-star and small-star
       // keyed aggregations; the round's checkpoint is its ONE action, and
-      // the change counting rides along.
-      countChanges(smallStar(countChanges(largeStar(e), changes)), changes)
+      // the change sums ride along.
+      starRound(e) match { case (next, obs) => changes = obs; next }
     }
     require(cc.done, s"connected components did not converge in $maxIter rounds")
     // the state is now a star forest whose edges cover every input node (each

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -109,7 +109,7 @@ object Graph {
       .repartition(col("src"))
       .persist())
     val ranks = Iterate(nodes.select(col("id"), lit(init).as("r")),
-        PrIters, _ => false) { r =>
+        PrIters, (_, _) => false) { r =>
       val out = edges match {
         case Some(e) => r.join(e, r("id") === e("src")).select(col("dst"), col("r"))
         case None => r.select(explode(dsts(col("id"), n)).as("dst"), col("r"))
@@ -210,38 +210,35 @@ object Graph {
   /** Single-source BFS level census — the fourth classic of the graph
     * suite (components, PageRank, triangles, shortest paths): exact
     * hop distance from node 0 over the symmetrized [[TriCoeffs]] graph,
-    * reported per level. Frontier expansion: each round joins the
-    * CURRENT frontier (not the visited set) to the src-partitioned
-    * edge table, dedups, and anti-joins the visited set — work per
-    * round ∝ frontier edge volume, total = O(E) across the whole
-    * traversal, O(diameter) rounds (≈ log N on an expander, the web /
-    * citation / link-graph case this models). Each round's new frontier
-    * is the [[Iterate]] state, so it is checkpointed like every loop
-    * here, and the empty-frontier test reads that checkpoint. The
-    * oracle replays the traversal as a recursive CTE with min-level
-    * dedup — a different algorithm (path enumeration + min) agreeing on
-    * the same levels.
+    * reported per level. The [[Iterate]] state is the visited set as
+    * (id, lvl) rows. Frontier expansion: each round takes the rows of
+    * the CURRENT level, joins them to the src-partitioned edge table,
+    * dedups, anti-joins the visited set, and appends the survivors at
+    * the next level — work per round ∝ frontier edge volume plus one
+    * copy of the ≤N visited rows, O(diameter) rounds (≈ log N on an
+    * expander, the web / citation / link-graph case this models). Each
+    * round's plan reads only the previous round's checkpoint, and the
+    * traversal stops at the first round whose observed row count did
+    * not grow (an empty frontier). The oracle replays the traversal as
+    * a recursive CTE with min-level dedup — a different algorithm (path
+    * enumeration + min) agreeing on the same levels.
     */
   def qBfs(s: SparkSession, dir: String): DataFrame = {
     val edges = bothWays(undirected(s, dir, TriCoeffs)._1)
-    // the visited set is a lazy union over the per-round CHECKPOINTED
-    // frontiers: re-checkpointing the union would copy every prior
-    // level's rows again each round — one extra O(|visited|) job per
-    // round. The union of ≤BfsMaxRounds checkpointed legs keeps the plan
-    // flat enough (each leg is a materialized leaf, nothing re-runs).
-    val legs = ArrayBuffer.empty[DataFrame]
-    val bfs = Iterate(s.range(1).select(lit(0L).as("id"), lit(0L).as("lvl")),
-        BfsMaxRounds, _.isEmpty) { frontier =>
-      legs += frontier
-      val ids = frontier.select(col("id"))
-      ids.join(edges, ids("id") === edges("src"))
+    var lvl = 0L
+    var reached = 1L
+    // done ⇔ the round added no row ⇔ its new frontier was empty
+    val bfs = Iterate(s.range(1).select(lit(0L).as("id"), lit(0L).as("lvl")), BfsMaxRounds,
+        (_, rows) => { val empty = rows == reached; reached = rows; empty }) { visited =>
+      val ids = visited.filter(col("lvl") === lvl).select(col("id"))
+      lvl += 1
+      visited.union(ids.join(edges, ids("id") === edges("src"))
         .select(col("dst").as("id")).distinct()
-        .join(legs.reduce(_ union _), Seq("id"), "left_anti")
-        .select(col("id"), lit(legs.size.toLong).as("lvl"))
+        .join(visited, Seq("id"), "left_anti")
+        .select(col("id"), lit(lvl).as("lvl")))
     }
-    if (!bfs.done) legs += bfs.state
     edges.unpersist(blocking = false)
-    legs.reduce(_ union _)
+    bfs.state
       .groupBy(col("lvl"))
       .agg(count(lit(1)).as("n_nodes"),
         min(col("id")).as("min_id"), max(col("id")).as("max_id"))
@@ -291,7 +288,7 @@ object Graph {
   def qSssp(s: SparkSession, dir: String): DataFrame = {
     val n = Tables.documents(s, dir).count()
     val dist = Iterate(s.range(1).select(lit(0L).as("id"), lit(0L).as("d")),
-        SsspIters, _ => false) { dist =>
+        SsspIters, (_, _) => false) { dist =>
       val cand = dist
         .select(col("id").as("u"), col("d"),
           explode(dsts(col("id"), n)).as("v"))
@@ -320,33 +317,35 @@ object Graph {
     * set (one explode + keyed aggregation — one Exchange), drops nodes
     * below k, and restricts edges to survivors (two semi-joins against
     * the ≤|nodes| keep list); [[Iterate]] truncates the 8-round
-    * lineage, and the per-round sizes are bounded driver roundtrips
-    * (two scalars/round — the CC accumulator class). A FIXED round
-    * count, not convergence detection, keeps the oracle a static
-    * 8-round MATERIALIZED-CTE unroll (the [[qSssp]] discipline); the
-    * census output is the cascade profile itself — (round, surviving
-    * nodes, surviving edges).
+    * lineage. The census launches no job: a round's surviving edges are
+    * [[Iterate]]'s observed row count, its surviving nodes an observed
+    * count on the keep list, read off that list's own checkpoint. A
+    * FIXED round count, not convergence detection, keeps the oracle a
+    * static 8-round MATERIALIZED-CTE unroll (the [[qSssp]] discipline);
+    * the census output is the cascade profile itself — (round,
+    * surviving nodes, surviving edges).
     */
   def qKcore(s: SparkSession, dir: String): DataFrame = {
-    var keep: DataFrame = null
+    var kept: Observation = null
     val census = ArrayBuffer.empty[(Long, Long, Long)]
     // a FIXED round count: `done` never holds; it is where each round's
-    // census reads the checkpointed edge set and the keep list behind it
-    Iterate(undirected(s, dir, TriCoeffs)._1, KCoreRounds, edges => {
-      census += ((census.size + 1L, keep.count(), edges.count()))
+    // census reads the two counts its checkpoints observed
+    Iterate(undirected(s, dir, TriCoeffs)._1, KCoreRounds, (_, edges) => {
+      census += ((census.size + 1L, kept.get("n").asInstanceOf[Long], edges))
       false
     }) { edges =>
-      // keep list checkpointed ONCE per round: lazy, keep.count() and the
-      // edge-restriction job each re-run the degree aggregation;
-      // checkpointed, both semi-joins and both census counts read the
-      // materialized ≤|nodes| list. A/B over 10 alternating traced
-      // curation pairs (4-vCPU host): same job and stage counts, q_kcore
-      // lower with it in 9 of 10 (median 3.22 s vs 3.70 s)
-      keep = edges
+      // keep list checkpointed ONCE per round: lazy, the two semi-joins
+      // would each re-run the degree aggregation. A/B over 10 alternating
+      // traced curation pairs (4-vCPU host), when the census still
+      // counted it: same job and stage counts, q_kcore lower with it in
+      // 9 of 10 (median 3.22 s vs 3.70 s)
+      kept = new Observation()
+      val keep = edges
         .select(explode(array(col("a"), col("b"))).as("id"))
         .groupBy(col("id")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= KCoreK)
         .select(col("id"))
+        .observe(kept, count(lit(1)).as("n"))
         .localCheckpoint()
       edges
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
@@ -372,7 +371,7 @@ object Graph {
       val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
       val edges = bothWays(undirected(s, dir, LinkCoeffs)._1)
       val lbl = Iterate(docs.select(col("id"), col("id").as("lbl")),
-          LpaIters, _ => false) { lbl =>
+          LpaIters, (_, _) => false) { lbl =>
         val votes = edges
           .join(lbl.select(col("id").as("src"), col("lbl")), "src")
           .groupBy(col("dst"), col("lbl"))

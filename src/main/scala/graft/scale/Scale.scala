@@ -1075,6 +1075,12 @@ object Scale {
     (basePath, table)
   }
 
+  /** The updated-lake path of [[mvIvmFixture]] — exposed for the spec,
+    * which recomputes the view from scratch over the same bits.
+    */
+  private[graft] def mvIvmLakePath(s: SparkSession, dir: String): String =
+    mvIvmFixture(s, dir)._1
+
   /** Per-supplier quarter revenue over the UPDATED fact THROUGH the MV
     * rewrite reading the incrementally MAINTAINED view: the query is the
     * ordinary filtered base aggregation against the post-delta lake (the
@@ -1088,12 +1094,6 @@ object Scale {
     * update costs O(|delta| + |view|) instead of O(|fact|), and the
     * optimizer's answer path costs O(|view|).
     */
-  /** The updated-lake path of [[mvIvmFixture]] — exposed for the spec,
-    * which recomputes the view from scratch over the same bits.
-    */
-  private[graft] def mvIvmLakePath(s: SparkSession, dir: String): String =
-    mvIvmFixture(s, dir)._1
-
   def qMvIvm(s: SparkSession, dir: String): DataFrame = {
     val (basePath, _) = mvIvmFixture(s, dir)
     val df = s.read.parquet(basePath)

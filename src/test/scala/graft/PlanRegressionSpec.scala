@@ -413,6 +413,39 @@ class PlanRegressionSpec extends SparkSpec with Matchers {
     }
   }
 
+  test("q_bfs: a round's plan reads only the previous round's checkpoint " +
+    "— its checkpointed leaves do not grow with the round") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = s"bfs_probe_${System.nanoTime()}"
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.output.map(_.name) match {
+          case Seq("id", "lvl") => plans.add(qe.executedPlan.toString)
+          case Seq(`marker`) => plans.add(marker)
+          case _ => ()
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.operators.Graph.qBfs(spark, sf())
+      // listener events arrive in order: the marker query's closes the run
+      spark.range(1).select(lit(1).as(marker)).collect()
+      eventually(timeout(30.seconds))(plans should contain(marker))
+    } finally spark.listenerManager.unregister(listener)
+    val leaves = plans.asScala.toSeq.filter(_ != marker)
+      .map(p => p.sliding("Scan ExistingRDD".length).count(_ == "Scan ExistingRDD"))
+      .filter(_ > 0) // the initial state's checkpoint reads no checkpoint
+    // the expander needs several rounds before its frontier empties
+    leaves.size should be >= 3
+    leaves.distinct.size shouldBe 1
+  }
+
   test("q_audio_dedup: WAV payloads never ride an Exchange — only " +
     "fixed-width fingerprint rows shuffle") {
     val plan = graft.operators.Multimodal.qAudioDedup(spark, sf())

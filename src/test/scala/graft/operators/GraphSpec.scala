@@ -167,6 +167,14 @@ class GraphSpec extends SparkSpec with Matchers {
     got shouldBe want
   }
 
+  test("q_kcore: the census rides the round checkpoints — at most 4 " +
+    "construction jobs per round after a 5-job prefix") {
+    // a round is the keep-list and the edge-set checkpoints, two jobs
+    // each under AQE; the census adds none of its own
+    val (_, jobs) = jobsDuring(Graph.qKcore(spark, sf()))
+    jobs should be <= 5 + 4 * Graph.KCoreRounds
+  }
+
   test("q_lpa: synchronous label propagation equals a driver-side " +
     "evaluation of the pinned update rule") {
     val n = Tables.documents(spark, sf()).count()

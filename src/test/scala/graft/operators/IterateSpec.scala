@@ -7,7 +7,8 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkSpec
 
 /** The round-driver contract every fixpoint loop relies on: how many
-  * rounds run, when the loop stops, and what it reports.
+  * rounds run, when the loop stops, what it reports, and what a round
+  * costs in Spark jobs.
   */
 class IterateSpec extends SparkSpec with Matchers {
 
@@ -17,7 +18,7 @@ class IterateSpec extends SparkSpec with Matchers {
 
   test("a run whose done never holds runs exactly maxRounds rounds and " +
     "reports not-done") {
-    val r = Iterate(zero, 5, _ => false)(inc)
+    val r = Iterate(zero, 5, (_, _) => false)(inc)
     (r.rounds, r.done, value(r.state)) shouldBe ((5, false, 5L))
     // the returned state is the last round's checkpoint, not its lineage
     r.state.queryExecution.executedPlan.toString should include("Scan ExistingRDD")
@@ -26,9 +27,54 @@ class IterateSpec extends SparkSpec with Matchers {
   test("the run stops at the first round whose done holds and reports " +
     "that round count") {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val r = Iterate(zero, 10, s => { seen += value(s); value(s) >= 3 })(inc)
+    val r = Iterate(zero, 10, (s, _) => { seen += value(s); value(s) >= 3 })(inc)
     (r.rounds, r.done, value(r.state)) shouldBe ((3, true, 3L))
     // done is tested once per round, never on the initial state
     seen shouldBe Seq(1L, 2L, 3L)
+  }
+
+  test("done's row count equals the checkpointed state's count()") {
+    val counts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    // each round keeps the rows it had and adds a copy of its even ones
+    Iterate(spark.range(10).select(col("id").as("n")), 4,
+        (s, rows) => { counts += ((rows, s.count())); false }) { df =>
+      df.union(df.filter(col("n") % 2 === 0).select((col("n") + 1L).as("n")))
+    }
+    counts.map(_._1) shouldBe Seq(15L, 20L, 25L, 30L)
+    counts.foreach { case (rows, n) => rows shouldBe n }
+  }
+
+  test("a round that empties the state observes a zero row count") {
+    // a statically empty step, and an aggregation whose shuffle turns out
+    // empty at run time (the case adaptive execution prunes)
+    val steps = Seq[DataFrame => DataFrame](_.filter(lit(false)),
+      _.filter(col("n") < 0L).groupBy(col("n")).agg(max(col("n")).as("m"))
+        .select(col("n")))
+    for (step <- steps) {
+      val r = Iterate(zero, 3, (_, rows) => rows == 0L)(step)
+      (r.rounds, r.done) shouldBe ((1, true))
+    }
+  }
+
+  test("reading the row count launches no Spark job") {
+    val reads = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
+    Iterate(zero, 3, (_, rows) => { reads += jobsDuring(rows); false })(inc)
+    reads shouldBe Seq((1L, 0), (1L, 0), (1L, 0))
+  }
+
+  test("a one-exchange step costs the same jobs per round as its " +
+    "checkpoint alone") {
+    val init = spark.range(100).select(col("id").as("n"))
+    def step(df: DataFrame): DataFrame =
+      df.groupBy((col("n") % 7).as("k")).agg(sum(col("n")).as("n"))
+        .select(col("n"))
+    val rounds = 3
+    val (_, looped) = jobsDuring(
+      Iterate(init, rounds, (_, rows) => rows < 0)(step))
+    val (_, bare) = jobsDuring(
+      (1 to rounds).foldLeft(init.localCheckpoint())((s, _) =>
+        step(s).localCheckpoint()))
+    bare should be > rounds
+    looped shouldBe bare
   }
 }
