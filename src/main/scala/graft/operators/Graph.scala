@@ -97,9 +97,7 @@ object Graph {
   private def pagerank(s: SparkSession, dir: String,
       storedEdges: Boolean): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    // N is the one driver-side scalar the iteration needs (the bounded
-    // roundtrip class — cf. GlobalOrder's pass-1 totals)
-    val n = docs.count()
+    val n = nodeCount(s, dir)
     val init = PrScale / n
     val tele = (TeleNum * init) / 100L
     val nodes = docs.repartition(col("id")).persist()
@@ -139,22 +137,50 @@ object Graph {
     */
   val TriCoeffs: Seq[(Long, Long)] = LinkCoeffs ++ Seq((1L, 1L), (1L, 2L))
 
-  /** (edges, N): the undirected simple edge set (a, b) of the functional
-    * graph over `coeffs` — symmetrized, self-loops dropped, oriented
-    * a < b, distinct — and the node count N its link formula needs.
+  private val nMemo = new SessionMemo[Long]()
+
+  /** N, the node count the link formula reduces by: the one driver-side
+    * scalar the graph queries need (the bounded roundtrip class — cf.
+    * GlobalOrder's pass-1 totals), counted once per corpus content.
+    */
+  private def nodeCount(s: SparkSession, dir: String): Long =
+    nMemo.getOrElseUpdate(s, dir)(Tables.documents(s, dir).count())
+
+  /** The arcs (src, dst) of the functional graph over `coeffs`,
+    * self-loops dropped — the one link formula [[undirected]] and
+    * [[adjacency]] both start from.
+    */
+  private def arcs(s: SparkSession, dir: String,
+      coeffs: Seq[(Long, Long)]): DataFrame = {
+    val n = nodeCount(s, dir)
+    Tables.documents(s, dir)
+      .select(col("doc_id").as("src"),
+        explode(dsts(col("doc_id"), n, coeffs)).as("dst"))
+      .filter(col("src") =!= col("dst"))
+  }
+
+  /** The undirected simple edge set (a, b) of the functional graph over
+    * `coeffs` — symmetrized, self-loops dropped, oriented a < b, distinct.
     */
   private def undirected(s: SparkSession, dir: String,
-      coeffs: Seq[(Long, Long)]): (DataFrame, Long) = {
-    val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val n = docs.count()
-    val und = docs
-      .select(col("id").as("src"), explode(dsts(col("id"), n, coeffs)).as("dst"))
-      .filter(col("src") =!= col("dst"))
+      coeffs: Seq[(Long, Long)]): DataFrame =
+    arcs(s, dir, coeffs)
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    (und, n)
-  }
+
+  /** The same graph node-centric: (id, nbrs) for every node with at least
+    * one edge, `nbrs` its distinct neighbours — one keyed aggregation
+    * (`collect_set` over both orientations of each arc).
+    */
+  private[graft] def adjacency(s: SparkSession, dir: String,
+      coeffs: Seq[(Long, Long)]): DataFrame =
+    arcs(s, dir, coeffs)
+      .select(explode(array(
+        struct(col("src").as("id"), col("dst").as("v")),
+        struct(col("dst").as("id"), col("src").as("v")))).as("e"))
+      .groupBy(col("e.id").as("id"))
+      .agg(collect_set(col("e.v")).as("nbrs"))
 
   /** Both orientations of an undirected edge set as (src, dst),
     * repartitioned on src ONCE and persisted: the probe side of a
@@ -179,8 +205,8 @@ object Graph {
     * joins, no cartesian anywhere (plan-pinned in spec).
     */
   def qTriangles(s: SparkSession, dir: String): DataFrame = {
-    val (edges, n) = undirected(s, dir, TriCoeffs)
-    val und = edges.persist()
+    val n = nodeCount(s, dir)
+    val und = undirected(s, dir, TriCoeffs).persist()
     val e1 = und.select(col("a"), col("b").as("x"))
     val e2 = und.select(col("a"), col("b").as("y"))
     val wedges = e1.join(e2, "a").filter(col("x") < col("y"))
@@ -224,7 +250,7 @@ object Graph {
     * enumeration + min) agreeing on the same levels.
     */
   def qBfs(s: SparkSession, dir: String): DataFrame = {
-    val edges = bothWays(undirected(s, dir, TriCoeffs)._1)
+    val edges = bothWays(undirected(s, dir, TriCoeffs))
     var lvl = 0L
     var reached = 1L
     // done ⇔ the round added no row ⇔ its new frontier was empty
@@ -250,13 +276,12 @@ object Graph {
     * histogram dictates the skew strategy for every downstream join;
     * this synthetic expander's histogram is tightly banded around 2·|C|,
     * which is exactly what the census shows). Two keyed aggregations:
-    * degree per node over the deduped undirected edges, then the
-    * ≤max-degree-sized histogram.
+    * the [[adjacency]] frame, whose `size(nbrs)` is each node's degree,
+    * then the ≤max-degree-sized histogram.
     */
   def qDegreeHist(s: SparkSession, dir: String): DataFrame =
-    undirected(s, dir, TriCoeffs)._1
-      .select(explode(array(col("a"), col("b"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+    adjacency(s, dir, TriCoeffs)
+      .select(col("id"), size(col("nbrs")).cast("bigint").as("deg"))
       .groupBy(col("deg")).agg(
         count(lit(1)).as("n_nodes"),
         min(col("id")).as("min_id"),
@@ -286,7 +311,7 @@ object Graph {
     * path weight), exactly unrolled by the oracle's 12 CTE rounds.
     */
   def qSssp(s: SparkSession, dir: String): DataFrame = {
-    val n = Tables.documents(s, dir).count()
+    val n = nodeCount(s, dir)
     val dist = Iterate(s.range(1).select(lit(0L).as("id"), lit(0L).as("d")),
         SsspIters, (_, _) => false) { dist =>
       val cand = dist
@@ -313,47 +338,52 @@ object Graph {
   /** k-core peeling census (Seidman 1983; distributed formulation à la
     * Montresor et al. 2013) — the fourth iterative-convergence class
     * after CC (label), PageRank (mass), and SSSP (min-plus): MONOTONE
-    * DELETION. Each round recomputes degrees over the surviving edge
-    * set (one explode + keyed aggregation — one Exchange), drops nodes
-    * below k, and restricts edges to survivors (two semi-joins against
-    * the ≤|nodes| keep list); [[Iterate]] truncates the 8-round
-    * lineage. The census launches no job: a round's surviving edges are
-    * [[Iterate]]'s observed row count, its surviving nodes an observed
-    * count on the keep list, read off that list's own checkpoint. A
-    * FIXED round count, not convergence detection, keeps the oracle a
-    * static 8-round MATERIALIZED-CTE unroll (the [[qSssp]] discipline);
-    * the census output is the cascade profile itself — (round,
-    * surviving nodes, surviving edges).
+    * DELETION. The [[Iterate]] state is the node-centric [[adjacency]]
+    * frame; each round is one [[kcoreRound]] — one keyed aggregation,
+    * one Exchange — and [[Iterate]] truncates the 8-round lineage. The
+    * census launches no job: a round's surviving nodes are [[Iterate]]'s
+    * observed row count, its surviving edges half an observed
+    * Σ size(nbrs) on the same checkpoint. A FIXED round count, not
+    * convergence detection, keeps the oracle a static 8-round
+    * MATERIALIZED-CTE unroll (the [[qSssp]] discipline); the census
+    * output is the cascade profile itself — (round, surviving nodes,
+    * surviving edges).
     */
   def qKcore(s: SparkSession, dir: String): DataFrame = {
-    var kept: Observation = null
+    var degrees: Observation = null
     val census = ArrayBuffer.empty[(Long, Long, Long)]
     // a FIXED round count: `done` never holds; it is where each round's
-    // census reads the two counts its checkpoints observed
-    Iterate(undirected(s, dir, TriCoeffs)._1, KCoreRounds, (_, edges) => {
-      census += ((census.size + 1L, kept.get("n").asInstanceOf[Long], edges))
+    // census reads the two counts its checkpoint observed
+    Iterate(adjacency(s, dir, TriCoeffs), KCoreRounds, (_, nodes) => {
+      census += ((census.size + 1L, nodes,
+        degrees.get("deg").asInstanceOf[Long] / 2))
       false
-    }) { edges =>
-      // keep list checkpointed ONCE per round: lazy, the two semi-joins
-      // would each re-run the degree aggregation. A/B over 10 alternating
-      // traced curation pairs (4-vCPU host), when the census still
-      // counted it: same job and stage counts, q_kcore lower with it in
-      // 9 of 10 (median 3.22 s vs 3.70 s)
-      kept = new Observation()
-      val keep = edges
-        .select(explode(array(col("a"), col("b"))).as("id"))
-        .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= KCoreK)
-        .select(col("id"))
-        .observe(kept, count(lit(1)).as("n"))
-        .localCheckpoint()
-      edges
-        .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
+    }) { adj =>
+      degrees = new Observation()
+      kcoreRound(adj).observe(degrees,
+        coalesce(sum(size(col("nbrs"))), lit(0L)).as("deg"))
     }
     import s.implicits._
     census.toSeq.toDF("round", "n_nodes", "n_edges").orderBy(col("round"))
   }
+
+  /** One peel round over an (id, nbrs) frame: every node of degree
+    * ≥ [[KCoreK]] emits a self marker (id, null) and (v, id) for each
+    * neighbour v, in one scan; grouping on id then yields each survivor's
+    * surviving neighbours. A group without a self marker is a peeled
+    * node that a survivor still named, and is dropped.
+    */
+  private[graft] def kcoreRound(adj: DataFrame): DataFrame =
+    adj.filter(size(col("nbrs")) >= KCoreK)
+      .select(explode(concat(
+        array(struct(col("id"), lit(null).cast("bigint").as("u"))),
+        transform(col("nbrs"), v => struct(v.as("id"), col("id").as("u")))))
+        .as("m"))
+      .groupBy(col("m.id").as("id"))
+      .agg(collect_list(col("m.u")).as("nbrs"),
+        bool_or(col("m.u").isNull).as("alive"))
+      .filter(col("alive"))
+      .select(col("id"), col("nbrs"))
 
   /** Synchronous LPA rounds — fixed so the oracle is a static unroll. */
   val LpaIters = 4
@@ -369,7 +399,7 @@ object Graph {
   private[operators] def lpaLabels(s: SparkSession, dir: String): DataFrame =
     lpaMemo.getOrElseUpdate(s, dir) {
       val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
-      val edges = bothWays(undirected(s, dir, LinkCoeffs)._1)
+      val edges = bothWays(undirected(s, dir, LinkCoeffs))
       val lbl = Iterate(docs.select(col("id"), col("id").as("lbl")),
           LpaIters, (_, _) => false) { lbl =>
         val votes = edges
@@ -422,7 +452,7 @@ object Graph {
     * sized join of the bounded community table against the edge frame.
     */
   def qModularity(s: SparkSession, dir: String): DataFrame = {
-    val und = undirected(s, dir, LinkCoeffs)._1
+    val und = undirected(s, dir, LinkCoeffs)
     val m = und.count()
     val lab = lpaLabels(s, dir)
     val intra = und

@@ -446,6 +446,16 @@ class PlanRegressionSpec extends SparkSpec with Matchers {
     leaves.distinct.size shouldBe 1
   }
 
+  test("q_kcore: a peel round is one keyed aggregation — exactly one " +
+    "Exchange and no join") {
+    import graft.operators.Graph
+    // the round's input as Iterate hands it over: a checkpointed state
+    val adj = Graph.adjacency(spark, sf(), Graph.TriCoeffs).localCheckpoint()
+    val plan = Graph.kcoreRound(adj).queryExecution.executedPlan.toString
+    plan.sliding("Exchange".length).count(_ == "Exchange") shouldBe 1
+    plan should not include "Join"
+  }
+
   test("q_audio_dedup: WAV payloads never ride an Exchange — only " +
     "fixed-width fingerprint rows shuffle") {
     val plan = graft.operators.Multimodal.qAudioDedup(spark, sf())

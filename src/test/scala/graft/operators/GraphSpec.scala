@@ -77,7 +77,12 @@ class GraphSpec extends SparkSpec with Matchers {
 
   test("q_degree_hist: the handshake identity holds and the expander's " +
     "degrees stay tightly banded") {
-    val rows = Graph.qDegreeHist(spark, sf()).collect()
+    val df = Graph.qDegreeHist(spark, sf())
+    // every column BIGINT: `size()` is INT, and the oracle's dtype check
+    // rejects an INT deg
+    df.schema.map(f => f.name -> f.dataType.simpleString) shouldBe
+      Seq("deg", "n_nodes", "min_id", "max_id").map(_ -> "bigint")
+    val rows = df.collect()
       .map(r => (r.getAs[Long]("deg"), r.getAs[Long]("n_nodes")))
     val n = Tables.documents(spark, sf()).count()
     val nEdges = {
@@ -167,12 +172,12 @@ class GraphSpec extends SparkSpec with Matchers {
     got shouldBe want
   }
 
-  test("q_kcore: the census rides the round checkpoints — at most 4 " +
+  test("q_kcore: the census rides the round checkpoints — at most 2 " +
     "construction jobs per round after a 5-job prefix") {
-    // a round is the keep-list and the edge-set checkpoints, two jobs
-    // each under AQE; the census adds none of its own
+    // a round is one aggregation and its checkpoint, two jobs under AQE;
+    // the census adds none of its own
     val (_, jobs) = jobsDuring(Graph.qKcore(spark, sf()))
-    jobs should be <= 5 + 4 * Graph.KCoreRounds
+    jobs should be <= 5 + 2 * Graph.KCoreRounds
   }
 
   test("q_lpa: synchronous label propagation equals a driver-side " +

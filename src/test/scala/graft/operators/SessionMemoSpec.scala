@@ -98,6 +98,7 @@ class SessionMemoSpec extends SparkSpec with Matchers {
 
   Seq[(String, String, String => DataFrame)](
     ("a plain memo", "q_lpa", d => Graph.qLpa(spark, d)),
+    ("the node-count memo", "q_kcore", d => Graph.qKcore(spark, d)),
     ("a PersistedDF", "q_dedup_minhash", d => Dedup.qDedupMinhash(spark, d)),
     ("a fixture", "q_ingest_jsonl",
       d => graft.sources.Ingest.qIngestJsonl(spark, d))
