@@ -43,15 +43,23 @@ final case class JobSpec(
   *     whole-partition variant for closures that genuinely need it.
   *   - Reduce: either holistic `(String, Iterator[String]) => String`
   *     (parity with `mapreduce.go:180-216`: all values of a key materialize)
-  *     or an algebraic [[Aggregator]] — which the reference *lacks* (no
-  *     combiner, OSDI'04 §4.3) and which is the only shape that scales:
-  *     partial aggregation keeps shuffle volume O(distinct keys), not O(rows).
+  *     or an algebraic [[Aggregator]].
+  *   - Combine (optional, OSDI'04 §4.3; the reference has none): a
+  *     `(String, Iterator[String]) => String` slot that merges a map task's
+  *     values of one key into a partial before the shuffle, so shuffle
+  *     volume is O(distinct keys per map task), not O(occurrences). The
+  *     contract: it must be associative and commutative, it is called
+  *     pairwise on partials (`combine(k, Iterator(partial, value))`), and
+  *     it may run zero or more times per key — the Reduce must accept raw
+  *     values and partials alike. An [[Aggregator]]'s `reduce`/`merge`
+  *     play the same role on [[runAggregated]].
   *
   * Scale notes (100 TB):
-  *   - the holistic path sends every value of a key to one task — same skew
-  *     hazard as the reference (the run walk streams them, it does not
-  *     buffer them); the docs steer users to the Aggregator path, which
-  *     Spark turns into partial+final `HashAggregateExec` with spill.
+  *   - the holistic path without a combiner sends every value of a key to
+  *     one task — same skew hazard as the reference (the run walk streams
+  *     them, it does not buffer them); with a combiner a hot key sends at
+  *     most one partial per map task per flush. The Aggregator path is
+  *     Spark's partial+final `HashAggregateExec` with spill.
   *   - the single-file sorted TSV sink (one partition) is the reference's
   *     contract (`mapreduce.go:256`), kept as an opt-in mode;
   *     `writeSortedTsv` with `singleFile = false` writes a range-partitioned
@@ -74,37 +82,32 @@ object MRJob {
       if (job.nMap > 0 && lines.getNumPartitions > n) lines.coalesce(n) else lines)
   }
 
-  /** The mapped-and-shuffle-ready pairs: Map applied per line, then (only if
-    * the caller pinned `nReduce`) hash-repartitioned by key — the Spark
-    * equivalent of `DoMap`'s `fnv32a(key) % nReduce` fan-out
-    * (`mapreduce.go:155-166`). Partition assignment is invisible in the final
-    * output (SURVEY §2.3.3) so Murmur3 replaces fnv32a.
-    */
-  def mapped(
-      spark: SparkSession,
-      job: JobSpec,
-      map: String => IterableOnce[KeyValue]): Dataset[KeyValue] = {
-    val kv = readLines(spark, job).flatMap(map)
-    if (job.nReduce > 0) kv.repartition(job.nReduce, col("key")) else kv
-  }
-
   /** Holistic reduce — exact parity with `DoReduce` (`mapreduce.go:178-219`):
-    * the user function sees every value of a key. Values arrive in no
-    * guaranteed order (same contract as the reference, SURVEY §2.3.2).
-    * Prefer [[runAggregated]] for algebraic reduces.
+    * the user function sees every value of a key, or, with a `combine`,
+    * every partial of it. Values arrive in no guaranteed order (same
+    * contract as the reference, SURVEY §2.3.2). Prefer [[runAggregated]]
+    * for reduces that have an [[Aggregator]] form.
     *
-    * The plan is the literal DoReduce: ONE hash shuffle by key (into
-    * exactly `nReduce` partitions when pinned; otherwise at the session
-    * partition count, which AQE may coalesce), a per-partition key sort
-    * (`sort.Strings`, `mapreduce.go:203-207`), and a streaming walk over
-    * consecutive key runs.
+    * The plan is the literal DoReduce: Map per line (the Spark equivalent
+    * of `DoMap`, `mapreduce.go:131-166`; Murmur3 replaces fnv32a, partition
+    * assignment being invisible in the output, SURVEY §2.3.3), ONE hash
+    * shuffle by key (into exactly `nReduce` partitions when pinned;
+    * otherwise at the session partition count, which AQE may coalesce), a
+    * per-partition key sort (`sort.Strings`, `mapreduce.go:203-207`), and
+    * a streaming walk over consecutive key runs. `combine = None` is that
+    * plan unchanged; `Some(c)` adds one map-side step below the shuffle,
+    * a bounded hash walk that folds each map task's pairs into one
+    * partial per key through `c` (see the class doc for its contract).
     */
   def runHolistic(
       spark: SparkSession,
       job: JobSpec,
       map: String => IterableOnce[KeyValue],
-      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
-    reduceStage(readLines(spark, job).flatMap(map), job, reduce)
+      reduce: (String, Iterator[String]) => String,
+      combine: Option[(String, Iterator[String]) => String] = None): Dataset[KeyValue] = {
+    val kv = readLines(spark, job).flatMap(map)
+    reduceStage(combine.fold(kv)(c => kv.mapPartitions(combineWalk(_, c, CombineKeys))), job, reduce)
+  }
 
   /** The shared reduce stage (see [[runHolistic]] for the plan). */
   private def reduceStage(
@@ -113,6 +116,61 @@ object MRJob {
       reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
     (if (job.nReduce > 0) kv.repartition(job.nReduce, col("key")) else kv.repartition(col("key")))
       .sortWithinPartitions("key").mapPartitions(reduceRuns(_, reduce))
+
+  /** Distinct keys a map task holds partials for before it flushes them:
+    * bounds a task's combine memory whatever its key cardinality.
+    */
+  private val CombineKeys = 1 << 16
+
+  /** The map-side combine: [[hashWalk]] with `combine` called pairwise on
+    * a key's partial and its next value.
+    */
+  private[mr] def combineWalk(
+      it: Iterator[KeyValue],
+      combine: (String, Iterator[String]) => String,
+      maxKeys: Int): Iterator[KeyValue] =
+    hashWalk[KeyValue, String](it, maxKeys)(_.key, _.value,
+      (k, partial, kv) => combine(k, Iterator(partial, kv.value)))
+      .map { case (k, v) => KeyValue(k, v) }
+
+  /** In-mapper combining: folds a map task's records into one partial per
+    * key (`start` begins a key's partial, `add` folds a record into it)
+    * and emits the partials when a new key arrives while the task holds
+    * `maxKeys` of them, or when its input ends. A key seen again after a
+    * flush starts a new partial, so a key may leave one task as several
+    * partials; memory stays bounded by `maxKeys` partials, and a hot key
+    * never buffers its values.
+    */
+  private def hashWalk[V, B](it: Iterator[V], maxKeys: Int)(
+      key: V => String, start: V => B, add: (String, B, V) => B): Iterator[(String, B)] =
+    new Iterator[(String, B)] {
+      private val partials = new java.util.HashMap[String, B]
+      private var flushed: Iterator[(String, B)] = Iterator.empty
+      def hasNext: Boolean = flushed.hasNext || {
+        var full = false
+        while (!full && it.hasNext) {
+          val v = it.next()
+          val k = key(v)
+          val prev = partials.get(k)
+          if (prev != null) partials.put(k, add(k, prev, v))
+          else {
+            if (partials.size >= maxKeys) { flushed = drain(); full = true }
+            partials.put(k, start(v))
+          }
+        }
+        if (!full) flushed = drain()
+        flushed.hasNext
+      }
+      def next(): (String, B) =
+        if (hasNext) flushed.next() else Iterator.empty.next()
+      private def drain(): Iterator[(String, B)] = {
+        val out = new Array[(String, B)](partials.size)
+        var i = 0
+        partials.forEach { (k, b) => out(i) = (k, b); i += 1 }
+        partials.clear()
+        out.iterator
+      }
+    }
 
   private implicit val kvEncoder: Encoder[KeyValue] = Encoders.product[KeyValue]
 
@@ -142,9 +200,17 @@ object MRJob {
     }
   }
 
-  /** Algebraic reduce via a typed [[Aggregator]] — unlocks map-side partial
-    * aggregation (the combiner the reference is missing; its shuffle carries
-    * one JSON record per *occurrence*, `mapreduce.go:156-164`).
+  /** Algebraic reduce via a typed [[Aggregator]] — map-side partial
+    * aggregation, the combiner the reference is missing (its shuffle
+    * carries one JSON record per *occurrence*, `mapreduce.go:156-164`).
+    *
+    * With `nReduce <= 0` Spark plans it: partial aggregate, one exchange at
+    * the session partition count, final aggregate. With `nReduce` pinned,
+    * each map task first folds its pairs into `(key, buffer)` partials
+    * through `agg.reduce` in the same bounded hash walk as the holistic
+    * combiner; ONE `repartition(nReduce, key)` carries the partials, and an
+    * aggregate over that partitioning (no further exchange) merges them
+    * with `agg.merge` and applies `agg.finish`.
     */
   def runAggregated[B: Encoder, O](
       spark: SparkSession,
@@ -153,10 +219,30 @@ object MRJob {
       agg: Aggregator[KeyValue, B, O])(implicit
       oe: Encoder[(String, O)]): Dataset[(String, O)] = {
     import spark.implicits._
-    // a column key, not a lambda: an opaque key appends a copy of every key
+    val kv = readLines(spark, job).flatMap(map)
+    // column keys, not lambdas: an opaque key appends a copy of every key
     // and shuffles again at the session partition count, ignoring nReduce
-    mapped(spark, job, map).groupBy($"key").as[String, KeyValue].agg(agg.toColumn)
+    if (job.nReduce <= 0) kv.groupBy($"key").as[String, KeyValue].agg(agg.toColumn)
+    else {
+      val pe = Encoders.tuple(Encoders.STRING, implicitly[Encoder[B]])
+      kv.mapPartitions(hashWalk[KeyValue, B](_, CombineKeys)(
+          _.key, agg.reduce(agg.zero, _), (_, b, v) => agg.reduce(b, v)))(pe)
+        .repartition(job.nReduce, $"_1")
+        .groupBy($"_1").as[String, (String, B)](Encoders.STRING, pe)
+        .agg(mergePartials(agg).toColumn)
+    }
   }
+
+  /** `agg`'s final phase over `(key, buffer)` partials: merge, then finish. */
+  private def mergePartials[B, O](agg: Aggregator[KeyValue, B, O]): Aggregator[(String, B), B, O] =
+    new Aggregator[(String, B), B, O] {
+      def zero: B = agg.zero
+      def reduce(b: B, p: (String, B)): B = agg.merge(b, p._2)
+      def merge(a: B, b: B): B = agg.merge(a, b)
+      def finish(b: B): O = agg.finish(b)
+      def bufferEncoder: Encoder[B] = agg.bufferEncoder
+      def outputEncoder: Encoder[O] = agg.outputEncoder
+    }
 
   /** Whole-partition Map variant for closures that need more than a line —
     * the reference hands Map the entire split text (`mapreduce.go:143-149`).
@@ -315,12 +401,14 @@ object MRJob {
   /** `RunSequential` parity (`mapreduce.go:288-301`): same operator code path
     * as any cluster run — only the master URL differs, preserving the
     * reference's local/distributed symmetry (SURVEY §4.2 last row).
+    * `combine` is [[runHolistic]]'s optional Combiner slot.
     */
   def runSequential(
       spark: SparkSession,
       job: JobSpec,
       map: String => IterableOnce[KeyValue],
       reduce: (String, Iterator[String]) => String,
-      singleFile: Boolean = true): Unit =
-    writeSortedTsv(runHolistic(spark, job, map, reduce), job.outputPath, singleFile)
+      singleFile: Boolean = true,
+      combine: Option[(String, Iterator[String]) => String] = None): Unit =
+    writeSortedTsv(runHolistic(spark, job, map, reduce, combine), job.outputPath, singleFile)
 }

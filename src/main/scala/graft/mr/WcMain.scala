@@ -45,7 +45,7 @@ object WcMain {
   private def run(master: String, in: String, out: String, nMap: Int, nReduce: Int): Unit = {
     val spark = graft.GraftSession.builder(master).appName("graft-wc").getOrCreate()
     try {
-      MRJob.runSequential(spark, JobSpec(in, out, nMap, nReduce), WordCount.mapFn, WordCount.reduceFn)
+      WordCount.runFile(spark, in, out, nMap = nMap, nReduce = nReduce)
       println(s"wordcount: $in -> $out")
     } finally spark.stop()
   }

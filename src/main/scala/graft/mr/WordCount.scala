@@ -12,8 +12,13 @@ import org.apache.spark.sql.functions._
   * count = number of occurrences.
   *
   * Two equivalent implementations are provided:
-  *   - [[viaMR]]: through the generic [[MRJob]] two-slot API — the literal
-  *     re-expression of `wc.go` (closure-based, holistic reduce).
+  *   - [[viaMR]]: through the generic [[MRJob]] slot API — the literal
+  *     re-expression of `wc.go` (closure-based, holistic reduce), plus the
+  *     Combiner the reference lacks (OSDI'04 §4.3 uses word count as its
+  *     example): [[reduceFn]] itself, since a sum is associative and
+  *     commutative. [[MRJob]] calls it pairwise on partials, zero or more
+  *     times per key, so the reduce sees a mix of "1"s and partial sums;
+  *     the output is the same either way.
   *   - [[viaSql]]: the declarative Spark-first form —
   *     `explode(split(..))`/`groupBy`/`count` — fully codegen'd, with
   *     map-side partial aggregation the reference lacks. This is the form
@@ -31,9 +36,15 @@ object WordCount {
   def mapFn(line: String): IterableOnce[KeyValue] =
     TokenPattern.split(line).iterator.filter(_.nonEmpty).map(KeyValue(_, "1"))
 
-  /** `wc.go:29-38` as a Reduce slot: sum of integer-parsed values. */
+  /** `wc.go:29-38` as a Reduce slot: sum of integer-parsed values, in
+    * `Long` like Go's 64-bit `int` (`strconv.Atoi`) — partials from the
+    * combiner may exceed `Int.MaxValue`.
+    */
   def reduceFn(key: String, values: Iterator[String]): String =
-    values.map(_.toInt).sum.toString
+    values.map(_.toLong).sum.toString
+
+  /** wc's Combine slot: the reduce itself (see the object doc). */
+  private val combineFn = Some(reduceFn _)
 
   /** The same reduce as an algebraic Aggregator (enables partial agg). */
   val sumAgg: Aggregator[KeyValue, Long, Long] =
@@ -46,9 +57,11 @@ object WordCount {
       def outputEncoder: Encoder[Long] = Encoders.scalaLong
     }
 
-  /** Closure-path word count over a text file, reference semantics. */
+  /** Closure-path word count over a text file, reference semantics,
+    * combined map-side.
+    */
   def viaMR(spark: SparkSession, job: JobSpec): Dataset[KeyValue] =
-    MRJob.runHolistic(spark, job, mapFn, reduceFn)
+    MRJob.runHolistic(spark, job, mapFn, reduceFn, combineFn)
 
   /** Declarative word count over any string column — the scale path.
     * `explode(split(col, sep))` + empty filter reproduces Go's
@@ -61,17 +74,22 @@ object WordCount {
       .agg(count(lit(1)).as("cnt"))
 
   /** End-to-end file pipeline matching `go run wc.go sequential <file>`:
-    * text in, sorted `word\tcount` TSV out (`README.md:17-31`).
+    * text in, sorted `word\tcount` TSV out (`README.md:17-31`), combined
+    * map-side. `nMap`/`nReduce` pin the job like [[JobSpec]]; [[WcMain]]
+    * runs through here.
     */
   def runFile(
       spark: SparkSession,
       input: String,
       output: String,
-      singleFile: Boolean = true): Unit =
+      singleFile: Boolean = true,
+      nMap: Int = 0,
+      nReduce: Int = 0): Unit =
     MRJob.runSequential(
       spark,
-      JobSpec(input, output),
+      JobSpec(input, output, nMap, nReduce),
       mapFn,
       reduceFn,
-      singleFile)
+      singleFile,
+      combineFn)
 }

@@ -3,7 +3,9 @@ package graft.mr
 import java.nio.file.Files
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.matchers.should.Matchers
@@ -93,12 +95,26 @@ class WordCountSpec extends SparkSpec with Matchers {
       .map(r => r.getString(0) -> r.getLong(1).toInt)
       .toMap
     got shouldBe brute(texts.mkString(" "))
+
+    // the holistic path with wc's combiner, auto and pinned reduce side
+    val in = Files.createTempFile("wc-prop", ".txt")
+    Files.writeString(in, texts.mkString(" "))
+    Seq(0, 3).foreach { nReduce =>
+      MRJob
+        .runHolistic(spark, JobSpec(in.toString, "", nReduce = nReduce),
+          WordCount.mapFn, WordCount.reduceFn, Some(WordCount.reduceFn))
+        .collect()
+        .map(kv => kv.key -> kv.value.toInt)
+        .toMap shouldBe brute(texts.mkString(" "))
+    }
   }
 
   test("reduce is order-insensitive (SURVEY §2.3.2) and aggregator agrees") {
     val values = Seq("1", "1", "1", "1", "1")
     WordCount.reduceFn("k", values.iterator) shouldBe
       WordCount.reduceFn("k", values.reverse.iterator)
+    // sums past Int.MaxValue, like Go's 64-bit int (partials can get there)
+    WordCount.reduceFn("k", Iterator("2147483647", "1")) shouldBe "2147483648"
 
     // Aggregator path (partial agg) over a shuffled dataset equals holistic.
     import spark.implicits._
@@ -241,16 +257,89 @@ class WordCountSpec extends SparkSpec with Matchers {
     }
   }
 
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The executed plan's shuffle exchanges (inside AQE's query stages). */
+  private def exchanges(ds: Dataset[_]): Seq[ShuffleExchangeExec] =
+    Plans.collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+
+  /** Typed map-side steps below `plan` (the Map itself is one). */
+  private def mapSteps(plan: SparkPlan): Int =
+    Plans.collect(plan) { case m: MapPartitionsExec => m }.size
+
+  private def recordsWritten(e: ShuffleExchangeExec): Long =
+    e.metrics("shuffleRecordsWritten").value
+
+  /** 2,000 lines over four distinct words: occurrences ≫ distinct keys. */
+  private def repetitiveText(): java.nio.file.Path = {
+    val in = Files.createTempFile("wc-combine", ".txt")
+    Files.writeString(in, Seq.fill(2000)("alpha beta, Gamma alpha delta").mkString("\n"))
+    in
+  }
+  private val repetitiveCounts =
+    Map("alpha" -> 4000L, "beta" -> 2000L, "Gamma" -> 2000L, "delta" -> 2000L)
+
+  test("holistic reduce without a combiner hands the reduce every raw value") {
+    val in = repetitiveText()
+    val r = MRJob.runHolistic(spark, JobSpec(in.toString, "", nReduce = 3),
+      WordCount.mapFn, (_, vs) => vs.size.toString)
+    r.collect().map(kv => kv.key -> kv.value.toLong).toMap shouldBe repetitiveCounts
+    val ex = exchanges(r)
+    withClue(finalPlan(r)) {
+      ex.size shouldBe 1
+      mapSteps(ex.head.child) shouldBe 1 // the Map, and no combine step
+      recordsWritten(ex.head) shouldBe repetitiveCounts.values.sum
+    }
+  }
+
+  test("wc's combiner: shuffle records written <= distinct keys x map partitions") {
+    val in = repetitiveText()
+    val maps = MRJob.readLines(spark, JobSpec(in.toString, "")).rdd.getNumPartitions
+    Seq(0, 3).foreach { nReduce =>
+      val r = WordCount.viaMR(spark, JobSpec(in.toString, "", nReduce = nReduce))
+      r.collect().map(kv => kv.key -> kv.value.toLong).toMap shouldBe repetitiveCounts
+      val ex = exchanges(r)
+      withClue(finalPlan(r)) {
+        ex.size shouldBe 1
+        mapSteps(ex.head.child) shouldBe 2 // the Map, then the combine
+        recordsWritten(ex.head) should be <= repetitiveCounts.size.toLong * maps
+      }
+    }
+  }
+
+  test("the combine walk flushes at its key limit; the partials still reduce to the totals") {
+    val partials = MRJob
+      .combineWalk(Iterator("a", "b", "c", "a", "b").map(KeyValue(_, "1")),
+        WordCount.reduceFn, maxKeys = 2)
+      .toSeq
+    // c flushes {a, b}, the second b flushes {c, a}, the end flushes {b}
+    partials.size shouldBe 5
+    partials.groupBy(_.key).map { case (k, kvs) =>
+      k -> WordCount.reduceFn(k, kvs.iterator.map(_.value))
+    } shouldBe Map("a" -> "2", "b" -> "2", "c" -> "1")
+    // a full walk keeps folding the keys it holds: one partial per key
+    MRJob.combineWalk(Iterator("a", "b", "a", "a").map(KeyValue(_, "1")),
+      WordCount.reduceFn, maxKeys = 2).toSeq.sortBy(_.key) shouldBe
+      Seq(KeyValue("a", "3"), KeyValue("b", "1"))
+  }
+
   test("aggregated reduce with nReduce pinned: one shuffle, at nReduce partitions") {
     import spark.implicits._
-    val in = Files.createTempFile("wc-aggpin", ".txt")
-    Files.writeString(in, "x x y x y z")
+    val in = repetitiveText()
+    val maps = MRJob.readLines(spark, JobSpec(in.toString, "")).rdd.getNumPartitions
     val r = MRJob.runAggregated(spark, JobSpec(in.toString, "", nReduce = 3),
       WordCount.mapFn, WordCount.sumAgg)
-    r.collect().toMap shouldBe Map("x" -> 3L, "y" -> 2L, "z" -> 1L)
+    r.collect().toMap shouldBe repetitiveCounts
     r.rdd.getNumPartitions shouldBe 3
-    val plan = finalPlan(r)
-    withClue(plan)(keyShuffles(plan) shouldBe 1)
+    val ex = exchanges(r)
+    withClue(finalPlan(r)) {
+      keyShuffles(finalPlan(r)) shouldBe 1
+      ex.size shouldBe 1
+      ex.head.outputPartitioning.numPartitions shouldBe 3
+      // combined map-side before the exchange, not after it
+      mapSteps(ex.head.child) shouldBe 2 // the Map, then the combine
+      recordsWritten(ex.head) should be <= repetitiveCounts.size.toLong * maps
+    }
   }
 
   test("single-file sorted TSV: the write shuffles into one partition, no range sampling") {
