@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * the engine can represent. (Through round 4 the accumulators were
   * 128-bit, exact only below 2¹²⁷ ≈ 1.7·10³⁸ with a documented
   * silent-wrap beyond — e.g. ~10¹⁸ rows of 10¹⁰-scale inputs; the third
-  * limb closes that last class, see `docs/NEXT.md`. ExactMomentsSpec
+  * limb closes that last class, see `docs/HISTORY.md`. ExactMomentsSpec
   * pins a Σx² > 2¹²⁷ case.) The widening costs one extra long-add with
   * carry per term — invisible next to the two multiplies (A/B in
   * BASELINE.md round-5 notes).

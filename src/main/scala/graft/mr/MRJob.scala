@@ -29,6 +29,32 @@ final case class JobSpec(
     nMap: Int = 0,
     nReduce: Int = 0)
 
+/** The text one Map call receives. The reference hands Map a whole split
+  * (`mapreduce.go:143-149`); for Maps that decompose per line, as word
+  * count does, every shape below is observably identical (SURVEY §2.3.4).
+  */
+sealed trait MapInput
+
+object MapInput {
+
+  /** One call per line of [[MRJob.readLines]]. */
+  case object Lines extends MapInput
+
+  /** One call per split: a [[MRJob.readLines]] partition's lines joined
+    * with "\n". Its boundaries are Hadoop's split points, not the
+    * reference's `nchunk` cuts, and CR of CRLF input and the trailing
+    * newline are normalized away.
+    */
+  case object Split extends MapInput
+
+  /** One call per chunk of [[MRJob.splitChunks]]: byte-identical to the
+    * reference's split files, for Maps sensitive to where chunks are cut
+    * or to their trailing newline. Needs `nMap > 0`; costs a stats pass
+    * and a chunk shuffle before the Map.
+    */
+  case object Chunks extends MapInput
+}
+
 /** Spark-native re-expression of the reference's two-slot MapReduce dataflow.
   *
   * The reference's whole API is two higher-order function slots
@@ -36,11 +62,9 @@ final case class JobSpec(
   * hash-partition shuffle between them, producing a key-sorted TSV file
   * (`mapreduce.go:229-266`). We express that contract as:
   *
-  *   - Map:   `String => IterableOnce[KeyValue]`  — a flatMap-shaped UDTF.
-  *     The reference hands Map a *whole split* (`mapreduce.go:143-149`); we
-  *     hand it a line. For line-tokenizing Maps (like word count) the two are
-  *     observably identical (SURVEY §2.3.4); `runMapPartitions` exposes the
-  *     whole-partition variant for closures that genuinely need it.
+  *   - Map:   `String => IterableOnce[KeyValue]`  — a flatMap-shaped UDTF,
+  *     called on a line, a split or the reference's chunk as its
+  *     [[MapInput]] says (a line by default).
   *   - Reduce: either holistic `(String, Iterator[String]) => String`
   *     (parity with `mapreduce.go:180-216`: all values of a key materialize)
   *     or an algebraic [[Aggregator]].
@@ -88,34 +112,43 @@ object MRJob {
     * contract as the reference, SURVEY §2.3.2). Prefer [[runAggregated]]
     * for reduces that have an [[Aggregator]] form.
     *
-    * The plan is the literal DoReduce: Map per line (the Spark equivalent
-    * of `DoMap`, `mapreduce.go:131-166`; Murmur3 replaces fnv32a, partition
-    * assignment being invisible in the output, SURVEY §2.3.3), ONE hash
-    * shuffle by key (into exactly `nReduce` partitions when pinned;
-    * otherwise at the session partition count, which AQE may coalesce), a
-    * per-partition key sort (`sort.Strings`, `mapreduce.go:203-207`), and
-    * a streaming walk over consecutive key runs. `combine = None` is that
-    * plan unchanged; `Some(c)` adds one map-side step below the shuffle,
-    * a bounded hash walk that folds each map task's pairs into one
-    * partial per key through `c` (see the class doc for its contract).
+    * The plan is the literal DoReduce: Map over `input` (the Spark
+    * equivalent of `DoMap`, `mapreduce.go:131-166`; Murmur3 replaces
+    * fnv32a, partition assignment being invisible in the output, SURVEY
+    * §2.3.3), ONE hash shuffle by key (into exactly `nReduce` partitions
+    * when pinned; otherwise at the session partition count, which AQE may
+    * coalesce), a per-partition key sort (`sort.Strings`,
+    * `mapreduce.go:203-207`), and a streaming walk over consecutive key
+    * runs. `combine = None` is that plan unchanged; `Some(c)` adds one
+    * map-side step below the shuffle, whatever the input shape: a bounded
+    * hash walk that folds each map task's pairs into one partial per key
+    * through `c` (see the class doc for its contract).
     */
   def runHolistic(
       spark: SparkSession,
       job: JobSpec,
       map: String => IterableOnce[KeyValue],
       reduce: (String, Iterator[String]) => String,
-      combine: Option[(String, Iterator[String]) => String] = None): Dataset[KeyValue] = {
-    val kv = readLines(spark, job).flatMap(map)
-    reduceStage(combine.fold(kv)(c => kv.mapPartitions(combineWalk(_, c, CombineKeys))), job, reduce)
-  }
-
-  /** The shared reduce stage (see [[runHolistic]] for the plan). */
-  private def reduceStage(
-      kv: Dataset[KeyValue],
-      job: JobSpec,
-      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
+      combine: Option[(String, Iterator[String]) => String] = None,
+      input: MapInput = MapInput.Lines): Dataset[KeyValue] = {
+    val mapped = mapOver(spark, job, map, input)
+    val kv = combine.fold(mapped)(c => mapped.mapPartitions(combineWalk(_, c, CombineKeys)))
     (if (job.nReduce > 0) kv.repartition(job.nReduce, col("key")) else kv.repartition(col("key")))
       .sortWithinPartitions("key").mapPartitions(reduceRuns(_, reduce))
+  }
+
+  /** The Map, called once per `input` text. */
+  private def mapOver(
+      spark: SparkSession,
+      job: JobSpec,
+      map: String => IterableOnce[KeyValue],
+      input: MapInput): Dataset[KeyValue] = input match {
+    case MapInput.Lines => readLines(spark, job).flatMap(map)
+    case MapInput.Split =>
+      readLines(spark, job).mapPartitions(it =>
+        if (it.isEmpty) Iterator.empty else map(it.mkString("\n")).iterator)
+    case MapInput.Chunks => splitChunks(spark, job).flatMap { case (_, text) => map(text) }
+  }
 
   /** Distinct keys a map task holds partials for before it flushes them:
     * bounds a task's combine memory whatever its key cardinality.
@@ -219,7 +252,7 @@ object MRJob {
       agg: Aggregator[KeyValue, B, O])(implicit
       oe: Encoder[(String, O)]): Dataset[(String, O)] = {
     import spark.implicits._
-    val kv = readLines(spark, job).flatMap(map)
+    val kv = mapOver(spark, job, map, MapInput.Lines)
     // column keys, not lambdas: an opaque key appends a copy of every key
     // and shuffles again at the session partition count, ignoring nReduce
     if (job.nReduce <= 0) kv.groupBy($"key").as[String, KeyValue].agg(agg.toColumn)
@@ -243,38 +276,6 @@ object MRJob {
       def bufferEncoder: Encoder[B] = agg.bufferEncoder
       def outputEncoder: Encoder[O] = agg.outputEncoder
     }
-
-  /** Whole-partition Map variant for closures that need more than a line —
-    * the reference hands Map the entire split text (`mapreduce.go:143-149`).
-    */
-  def runMapPartitions(
-      spark: SparkSession,
-      job: JobSpec,
-      map: Iterator[String] => Iterator[KeyValue],
-      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
-    reduceStage(readLines(spark, job).mapPartitions(map), job, reduce)
-
-  /** Whole-split Map SHAPE — Map receives its split as ONE string, the
-    * reference's call shape (`mapreduce.go:143-149` reads the whole split
-    * file into memory before calling Map). NOT byte-faithful to the
-    * reference: chunk = this partition's lines re-joined with "\n" (CR of
-    * CRLF input and the trailing newline are normalized away). A chunk is
-    * a contiguous run of lines ([[readLines]]' byte-range splits), but its
-    * boundaries are Hadoop's split points, not the reference's `nchunk`
-    * cuts. For Maps that decompose per line, all such chunkings are
-    * observably identical (SURVEY §2.3.4 — pinned across nMap values by
-    * WordCountSpec); a Map that is sensitive to CRLF bytes or to where the
-    * chunks are cut needs [[runWholeSplitContiguous]] instead.
-    */
-  def runWholeSplit(
-      spark: SparkSession,
-      job: JobSpec,
-      map: String => IterableOnce[KeyValue],
-      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
-    runMapPartitions(spark, job,
-      it => if (it.isEmpty) Iterator.empty
-            else map(it.mkString("\n")).iterator,
-      reduce)
 
   /** Byte-faithful re-expression of the reference's `Split`
     * (`mapreduce.go:74-112`): chunk m's text is EXACTLY the bytes of the
@@ -358,22 +359,6 @@ object MRJob {
         "").as("text"))
       .as[(Long, String)]
   }
-
-  /** Whole-split Map with BYTE-FAITHFUL reference chunking: Map receives
-    * chunk strings identical to the reference's split files
-    * (`mapreduce.go:143-149` reads the whole split into one string), via
-    * [[splitChunks]]. Use when a Map closure is sensitive to chunk
-    * contiguity or the trailing newline; for per-line Maps,
-    * [[runWholeSplit]]'s partition-shaped chunks are observably identical
-    * and avoid the extra pass.
-    */
-  def runWholeSplitContiguous(
-      spark: SparkSession,
-      job: JobSpec,
-      map: String => IterableOnce[KeyValue],
-      reduce: (String, Iterator[String]) => String): Dataset[KeyValue] =
-    reduceStage(
-      splitChunks(spark, job).flatMap { case (_, text) => map(text) }, job, reduce)
 
   /** The reference's output contract (SURVEY §2.3.1): lines `key\tvalue`,
     * ascending bytewise key order, one file (`mapreduce.go:251-263`).

@@ -31,7 +31,8 @@ import graft.tables.Tables
   *   1. range-partition by (h, doc_id) and sort within partitions — ONE
   *      corpus shuffle, every partition holds a contiguous key range;
   *   2. per-partition (row count, token sum) — a #partitions-row driver
-  *      roundtrip (the documented bounded class, like MRJob.scala:251);
+  *      roundtrip (the documented bounded class, like
+  *      [[graft.mr.MRJob.splitChunks]]'s pass 1);
   *      prefix-sum those driver-side into per-partition offsets;
   *   3. walk each partition once (`mapPartitions` — per-partition
   *      sequential state, the [[Sampling.qPackFit]] justification), add

@@ -741,8 +741,8 @@ object Sampling {
     * exact integers in a fixed parenthesization, bit-identical across
     * engines. Replicates where the en-subgroup draws zero total weight
     * are dropped on BOTH sides (deterministic, P ≈ e^{-n_en}); the CI is
-    * the same 2.5%/97.5% rank pair. Closes docs/NEXT.md round-8
-    * opportunity "bootstrap for non-mean statistics".
+    * the same 2.5%/97.5% rank pair. Closes the round-8 opportunity
+    * "bootstrap for non-mean statistics" (docs/HISTORY.md, last section).
     */
   def qBootstrapRatio(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)

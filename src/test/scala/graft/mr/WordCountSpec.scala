@@ -135,10 +135,10 @@ class WordCountSpec extends SparkSpec with Matchers {
     // chunking (including a single chunk) must produce identical output
     // for a per-line-decomposable Map like the wc tokenizer
     val expected = brute(text)
-    Seq(0, 1, 3, 7).foreach { nMap =>
+    for (nMap <- Seq(0, 1, 3, 7); combine <- Seq(None, Some(WordCount.reduceFn _))) {
       val got = MRJob
-        .runWholeSplit(spark, JobSpec(in.toString, "", nMap = nMap),
-          WordCount.mapFn, WordCount.reduceFn)
+        .runHolistic(spark, JobSpec(in.toString, "", nMap = nMap),
+          WordCount.mapFn, WordCount.reduceFn, combine, MapInput.Split)
         .collect()
         .map(kv => kv.key -> kv.value.toInt)
         .toMap
@@ -188,11 +188,25 @@ class WordCountSpec extends SparkSpec with Matchers {
     }
 
     // and the Map path over contiguous chunks leaves wc output unchanged
-    val viaContig = MRJob
-      .runWholeSplitContiguous(spark, JobSpec(in.toString, "", nMap = 3),
-        WordCount.mapFn, WordCount.reduceFn)
-      .collect().map(kv => kv.key -> kv.value.toInt).toMap
-    viaContig shouldBe brute(new String(raw, java.nio.charset.StandardCharsets.UTF_8))
+    Seq(None, Some(WordCount.reduceFn _)).foreach { combine =>
+      val viaContig = MRJob
+        .runHolistic(spark, JobSpec(in.toString, "", nMap = 3),
+          WordCount.mapFn, WordCount.reduceFn, combine, MapInput.Chunks)
+        .collect().map(kv => kv.key -> kv.value.toInt).toMap
+      viaContig shouldBe brute(new String(raw, java.nio.charset.StandardCharsets.UTF_8))
+    }
+  }
+
+  test("the Chunks input fails loudly on a missing nMap and on a line longer than a chunk") {
+    val in = Files.createTempFile("wc-chunks-loud", ".txt")
+    Files.writeString(in, "a b c d e f g h i j k l m n o p q r s t u v w x y z\nshort\n")
+    def run(nMap: Int) = MRJob.runHolistic(spark, JobSpec(in.toString, "", nMap = nMap),
+      WordCount.mapFn, WordCount.reduceFn, input = MapInput.Chunks)
+    intercept[IllegalArgumentException](run(0)).getMessage should include(
+      "splitChunks needs an explicit nMap")
+    // nchunk = 58 bytes / 2 + 1 = 30; the first line takes 52
+    intercept[IllegalArgumentException](run(2)).getMessage should include(
+      "exceeds the chunk size")
   }
 
   test("nReduce pins shuffle partition count; output unaffected") {
@@ -303,6 +317,29 @@ class WordCountSpec extends SparkSpec with Matchers {
         ex.size shouldBe 1
         mapSteps(ex.head.child) shouldBe 2 // the Map, then the combine
         recordsWritten(ex.head) should be <= repetitiveCounts.size.toLong * maps
+      }
+    }
+  }
+
+  test("the Split and Chunks inputs combine too: shuffle records written <= distinct keys x map tasks") {
+    val in = repetitiveText()
+    for (input <- Seq(MapInput.Split, MapInput.Chunks);
+         combine <- Seq(None, Some(WordCount.reduceFn _))) {
+      val r = MRJob.runHolistic(spark, JobSpec(in.toString, "", nMap = 3, nReduce = 3),
+        WordCount.mapFn, WordCount.reduceFn, combine, input)
+      r.collect().map(kv => kv.key -> kv.value.toLong).toMap shouldBe repetitiveCounts
+      // the key exchange: Chunks puts its chunk assembly's exchange below it
+      val ex = exchanges(r).filter(_.output.exists(_.name == "key"))
+      withClue(s"$input, $combine: ${finalPlan(r)}") {
+        ex.size shouldBe 1
+        if (combine.isEmpty) {
+          mapSteps(ex.head.child) shouldBe 1 // the Map alone
+          recordsWritten(ex.head) shouldBe repetitiveCounts.values.sum
+        } else {
+          mapSteps(ex.head.child) shouldBe 2 // the Map, then the combine
+          recordsWritten(ex.head) should be <=
+            repetitiveCounts.size.toLong * ex.head.inputRDD.getNumPartitions
+        }
       }
     }
   }
