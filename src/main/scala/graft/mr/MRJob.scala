@@ -50,7 +50,7 @@ object MapInput {
   /** One call per chunk of [[MRJob.splitChunks]]: byte-identical to the
     * reference's split files, for Maps sensitive to where chunks are cut
     * or to their trailing newline. Needs `nMap > 0`; costs a stats pass
-    * and a chunk shuffle before the Map.
+    * and a chunk shuffle into `nMap` map tasks before the Map.
     */
   case object Chunks extends MapInput
 }
@@ -350,8 +350,11 @@ object MRJob {
       .toDF("chunk_id", "off", "line")
 
     // reassemble each chunk in offset order; every line contributes a
-    // trailing "\n" (scanner parity), so the chunk is mkString + "\n"
+    // trailing "\n" (scanner parity), so the chunk is mkString + "\n".
+    // The assembly's exchange is pinned to nMap partitions (the aggregate
+    // reuses it), so AQE cannot coalesce the Map below nMap tasks
     assigned
+      .repartition(job.nMap, col("chunk_id"))
       .groupBy(col("chunk_id"))
       .agg(array_join(
         transform(array_sort(collect_list(struct(col("off"), col("line")))),

@@ -41,8 +41,8 @@ object Relational {
     * values), divide back exactly (result scale 6 ≥ 2). Value-identical
     * to summing DECIMAL(18,2) casts — the oracle gate pins the bits — but
     * the per-row work is one double multiply + floor instead of a decimal
-    * cast, which profiled 2.3× faster on the q1 shape
-    * (`graft.tools.Profile`, "q1 arithmetic variants"). ONLY for the
+    * cast, which profiled 2.3× faster on the q1 shape (BASELINE.md,
+    * "Measured (round 4 continuation)"). ONLY for the
     * corpus' 2-decimal money columns: on arbitrary doubles the rounding
     * mode of floor(+0.5) and a decimal HALF_UP cast can diverge
     * ([[Events]] keeps the decimal-cast path for its off-grid `value`).

@@ -48,8 +48,8 @@ object Tables {
     // the as-of join) assumes the UTC session zone; the cast executes
     // LAZILY, so like nanosAsLong above this must be session-level — a
     // restore-after-read would shift instants on later executions of the
-    // returned DataFrame for any non-UTC caller (tools/Profile,
-    // tools/Explain, external GraftSession.init hosts)
+    // returned DataFrame for any non-UTC caller (tools/Explain, external
+    // GraftSession.init hosts)
     if (s.conf.get("spark.sql.session.timeZone") != "UTC")
       s.conf.set("spark.sql.session.timeZone", "UTC")
     val df = load(s, d, "events")

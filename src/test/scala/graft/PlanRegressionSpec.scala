@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
@@ -719,10 +721,8 @@ class PlanRegressionSpec extends SparkSpec with Matchers {
     spark.table(ptW("lbl_0")).count() should be <= 2 * nEdgesW
     // the df-kill stage materialized and killed at least one template
     // shingle at this SF (nonempty hot set ⇒ some doc's set shrank);
-    // assert via total shingle mass: killed sig ≤ collected shs mass.
-    // The collected-shingle stage is variant-INVARIANT since r15 — one
-    // shared (un-prefixed) table serves both pipelines
-    val shsMass = spark.table(pt("shs"))
+    // assert via total shingle mass: killed sig ≤ collected shs mass
+    val shsMass = spark.table(ptW("shs"))
       .agg(sum(org.apache.spark.sql.functions.size(col("hs"))))
       .head().getLong(0)
     val sigMass = spark.table(ptW("sig"))
@@ -746,22 +746,29 @@ class PlanRegressionSpec extends SparkSpec with Matchers {
     snap() shouldBe before
   }
 
+  private def copyTree(from: Path, to: Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.forEach { p =>
+      val q = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q)
+    }
+    finally walk.close()
+  }
+
+  private def deleteTree(root: Path): Unit = {
+    val walk = Files.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+    finally walk.close()
+  }
+
   test("q_sql_pipeline_wide: a corpus rewritten at the same path rebuilds " +
     "the shared gate/shs stages — the wide ledger equals a from-scratch " +
     "wide run, never one over stages of the old corpus") {
-    import java.nio.file.{Files, Path}
     import graft.operators.SqlSurface
     def ledger(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
-    def copyTree(from: Path, to: Path): Unit = {
-      val walk = Files.walk(from)
-      try walk.forEach { p =>
-        val q = to.resolve(from.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(q)
-        else Files.copy(p, q)
-      }
-      finally walk.close()
-    }
     val tmp = Files.createTempDirectory("graft-pl-rewrite")
     try {
       val dir = tmp.resolve("corpus")
@@ -783,11 +790,96 @@ class PlanRegressionSpec extends SparkSpec with Matchers {
       want.collect { case (id, "duplicate", _) if id >= 1000 => id } should
         not be empty
       got shouldBe want
-    } finally {
-      val walk = Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
+    } finally deleteTree(tmp)
+  }
+
+  test("q_sql_pipeline_wide launches the same jobs on a cold corpus as right " +
+    "after q_sql_pipeline built it: no stage reuse across variants") {
+    import graft.operators.SqlSurface
+    val tmp = Files.createTempDirectory("graft-pl-order")
+    try {
+      val dir = tmp.resolve("corpus")
+      copyTree(Paths.get(sf()), dir)
+      val (_, cold) = jobsDuring(SqlSurface.qSqlPipelineWide(spark, dir.toString))
+      SqlSurface.qSqlPipeline(spark, dir.toString)
+      val (_, warm) = jobsDuring(SqlSurface.qSqlPipelineWide(spark, dir.toString))
+      cold should be > 0
+      warm shouldBe cold
+    } finally deleteTree(tmp)
+  }
+
+  test("q_sql_pipeline on an edge-free corpus: the empty first round's write " +
+    "observes no change, so the loop stops after one round") {
+    import graft.operators.SqlSurface
+    val tmp = Files.createTempDirectory("graft-pl-empty")
+    try {
+      val dir = tmp.resolve("corpus").toString
+      // two one-word documents: the quality gate drops both, so no edges
+      spark.createDataFrame(Seq((1L, "alpha"), (2L, "beta"))).toDF("doc_id", "text")
+        .write.parquet(s"$dir/documents.parquet")
+      val got = SqlSurface.qSqlPipeline(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+      got.map(_._2).toSet shouldBe Set("gated")
+      spark.table(SqlSurface.plTable(dir, "lbl_1")).count() shouldBe 0L
+      spark.catalog.tableExists(SqlSurface.plTable(dir, "lbl_2")) shouldBe false
+    } finally deleteTree(tmp)
+  }
+
+  test("q_sql_pipeline: the label rounds stop at the first round that changes " +
+    "no root, and only the next round's write and the ledger read a round") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.operators.SqlSurface
+    object Plans extends AdaptiveSparkPlanHelper
+    val lbl = (0 to SqlSurface.PipelineMaxRounds)
+      .map(i => SqlSurface.plTable(sf(), s"lbl_$i").toLowerCase -> i).toMap
+    // per SQL execution: the round tables its physical plan scans, and the
+    // table it writes (a stage write runs as a nested file insert)
+    val execs = new ConcurrentLinkedQueue[(Set[Int], Option[String])]()
+    val marker = s"pl-rounds-${System.nanoTime()}"
+    @volatile var markerSeen = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (qe.analyzed.toString.contains(marker)) markerSeen = true
+        val scans = Plans.collect(qe.executedPlan) {
+          case f: FileSourceScanExec => f.tableIdentifier.map(_.table.toLowerCase)
+        }.flatten.flatMap(lbl.get).toSet
+        val written = qe.analyzed.collectFirst {
+          case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName.toLowerCase
+        }
+        execs.add((scans, written))
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SqlSurface.qSqlPipeline(spark, sf()).collect()
+      spark.sql(s"SELECT '$marker'").collect()
+      eventually(timeout(30.seconds))(markerSeen shouldBe true)
+    } finally spark.listenerManager.unregister(listener)
+    def rows(i: Int) = spark.table(SqlSurface.plTable(sf(), s"lbl_$i")).collect()
+      .map(row => (row.getLong(0), row.getLong(1))).toSet
+    val r = lbl.collect { case (t, i) if spark.catalog.tableExists(t) => i }.max
+    // sf0.001's duplicate clusters need one changing round, then one that
+    // confirms the fixpoint
+    r should be >= 2
+    rows(r) shouldBe rows(r - 1)
+    rows(r - 1) should not be rows(r - 2)
+    import scala.jdk.CollectionConverters._
+    val readers = execs.asScala.toSeq.filter(_._1.nonEmpty)
+    withClue(readers.mkString("\n")) {
+      // each round's write scans exactly the round before
+      readers.collect { case (scans, Some(t)) if lbl.contains(t) =>
+        scans shouldBe Set(lbl(t) - 1); lbl(t)
+      }.toSet shouldBe (1 to r).toSet
+      // no other write reads a round, and the ledger is the one read
+      readers.filter(e => e._2.exists(t => !lbl.contains(t))) shouldBe empty
+      readers.filter(_._2.isEmpty) shouldBe Seq((Set(r), None))
     }
   }
 

@@ -344,6 +344,18 @@ class WordCountSpec extends SparkSpec with Matchers {
     }
   }
 
+  test("the Chunks input maps in nMap tasks: the key exchange's child has nMap partitions") {
+    val in = repetitiveText()
+    val r = MRJob.runHolistic(spark, JobSpec(in.toString, "", nMap = 3, nReduce = 3),
+      WordCount.mapFn, WordCount.reduceFn, Some(WordCount.reduceFn _), MapInput.Chunks)
+    r.collect().map(kv => kv.key -> kv.value.toLong).toMap shouldBe repetitiveCounts
+    val ex = exchanges(r).filter(_.output.exists(_.name == "key"))
+    withClue(finalPlan(r)) {
+      ex.size shouldBe 1
+      ex.head.inputRDD.getNumPartitions shouldBe 3
+    }
+  }
+
   test("the combine walk flushes at its key limit; the partials still reduce to the totals") {
     val partials = MRJob
       .combineWalk(Iterator("a", "b", "c", "a", "b").map(KeyValue(_, "1")),
