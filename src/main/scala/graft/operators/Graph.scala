@@ -1,8 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -21,6 +19,14 @@ import graft.operators.SessionMemo
   *     iterative plan replayed from parquet re-runs every prior round on
   *     any executor loss — at 100 TB the checkpoint is mandatory, at spec
   *     scale it keeps planning O(1) per round);
+  *   - only jobs that do work: the fixed-round loops (PageRank, SSSP,
+  *     k-core, the LPA build) run through [[Iterate.rounds]], whose lazy
+  *     checkpoints cost one job per one-exchange round. BFS stays on the
+  *     eager [[Iterate.apply]] (as CC does): it stops on the round's
+  *     observed row count, which must be known before the next round is
+  *     built. A per-round census is observed on the state where the next
+  *     round reads it, never on a step's own output, which a lazy
+  *     checkpoint would report as zeros;
   *   - all-INTEGER rank arithmetic (scaled by 10¹²) so the fixed-point
   *     iteration is bit-identical on both engines and the DuckDB oracle
   *     can unroll the rounds as CTEs (the [[Bpe]] trick) instead of a
@@ -106,8 +112,8 @@ object Graph {
       .select(col("id").as("src"), explode(dsts(col("id"), n)).as("dst"))
       .repartition(col("src"))
       .persist())
-    val ranks = Iterate(nodes.select(col("id"), lit(init).as("r")),
-        PrIters, (_, _) => false) { r =>
+    val ranks = Iterate.rounds(nodes.select(col("id"), lit(init).as("r")),
+        PrIters) { r =>
       val out = edges match {
         case Some(e) => r.join(e, r("id") === e("src")).select(col("dst"), col("r"))
         case None => r.select(explode(dsts(col("id"), n)).as("dst"), col("r"))
@@ -277,7 +283,9 @@ object Graph {
     * this synthetic expander's histogram is tightly banded around 2·|C|,
     * which is exactly what the census shows). Two keyed aggregations:
     * the [[adjacency]] frame, whose `size(nbrs)` is each node's degree,
-    * then the ≤max-degree-sized histogram.
+    * then the ≤max-degree-sized histogram, combined map-side — so one
+    * final task sorts it at any scale, with no range-sampling job and no
+    * range exchange of a global `orderBy`.
     */
   def qDegreeHist(s: SparkSession, dir: String): DataFrame =
     adjacency(s, dir, TriCoeffs)
@@ -286,7 +294,7 @@ object Graph {
         count(lit(1)).as("n_nodes"),
         min(col("id")).as("min_id"),
         max(col("id")).as("max_id"))
-      .orderBy(col("deg"))
+      .coalesce(1).sortWithinPartitions(col("deg"))
 
   /** Relaxation rounds for [[qSssp]]: distances are exact over all paths
     * of ≤ SsspIters edges (the hop-bounded Bellman–Ford contract — the
@@ -312,8 +320,8 @@ object Graph {
     */
   def qSssp(s: SparkSession, dir: String): DataFrame = {
     val n = nodeCount(s, dir)
-    val dist = Iterate(s.range(1).select(lit(0L).as("id"), lit(0L).as("d")),
-        SsspIters, (_, _) => false) { dist =>
+    val dist = Iterate.rounds(
+        s.range(1).select(lit(0L).as("id"), lit(0L).as("d")), SsspIters) { dist =>
       val cand = dist
         .select(col("id").as("u"), col("d"),
           explode(dsts(col("id"), n)).as("v"))
@@ -338,33 +346,26 @@ object Graph {
   /** k-core peeling census (Seidman 1983; distributed formulation à la
     * Montresor et al. 2013) — the fourth iterative-convergence class
     * after CC (label), PageRank (mass), and SSSP (min-plus): MONOTONE
-    * DELETION. The [[Iterate]] state is the node-centric [[adjacency]]
-    * frame; each round is one [[kcoreRound]] — one keyed aggregation,
-    * one Exchange — and [[Iterate]] truncates the 8-round lineage. The
-    * census launches no job: a round's surviving nodes are [[Iterate]]'s
-    * observed row count, its surviving edges half an observed
-    * Σ size(nbrs) on the same checkpoint. A FIXED round count, not
+    * DELETION. The [[Iterate.rounds]] state is the node-centric
+    * [[adjacency]] frame; each round is one [[kcoreRound]] — one keyed
+    * aggregation, one Exchange, one job — and the lazy checkpoints
+    * truncate the 8-round lineage. The census launches no job: a round's
+    * surviving nodes are an observed row count, its surviving edges half
+    * an observed Σ size(nbrs), both read where the next round (or the
+    * closing write) scans that state; its eight rows are built on the
+    * driver in round order, with no sort. A FIXED round count, not
     * convergence detection, keeps the oracle a static 8-round
     * MATERIALIZED-CTE unroll (the [[qSssp]] discipline); the census
     * output is the cascade profile itself — (round, surviving nodes,
     * surviving edges).
     */
   def qKcore(s: SparkSession, dir: String): DataFrame = {
-    var degrees: Observation = null
-    val census = ArrayBuffer.empty[(Long, Long, Long)]
-    // a FIXED round count: `done` never holds; it is where each round's
-    // census reads the two counts its checkpoint observed
-    Iterate(adjacency(s, dir, TriCoeffs), KCoreRounds, (_, nodes) => {
-      census += ((census.size + 1L, nodes,
-        degrees.get("deg").asInstanceOf[Long] / 2))
-      false
-    }) { adj =>
-      degrees = new Observation()
-      kcoreRound(adj).observe(degrees,
-        coalesce(sum(size(col("nbrs"))), lit(0L)).as("deg"))
-    }
+    val census = Iterate.rounds(adjacency(s, dir, TriCoeffs), KCoreRounds,
+        count(lit(1)), coalesce(sum(size(col("nbrs"))), lit(0L)))(kcoreRound)
+      .metrics.zipWithIndex.map { case (r, k) =>
+        (k + 1L, r.getLong(0), r.getLong(1) / 2) }
     import s.implicits._
-    census.toSeq.toDF("round", "n_nodes", "n_edges").orderBy(col("round"))
+    census.toDF("round", "n_nodes", "n_edges")
   }
 
   /** One peel round over an (id, nbrs) frame: every node of degree
@@ -400,8 +401,8 @@ object Graph {
     lpaMemo.getOrElseUpdate(s, dir) {
       val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
       val edges = bothWays(undirected(s, dir, LinkCoeffs))
-      val lbl = Iterate(docs.select(col("id"), col("id").as("lbl")),
-          LpaIters, (_, _) => false) { lbl =>
+      val lbl = Iterate.rounds(docs.select(col("id"), col("id").as("lbl")),
+          LpaIters) { lbl =>
         val votes = edges
           .join(lbl.select(col("id").as("src"), col("lbl")), "src")
           .groupBy(col("dst"), col("lbl"))

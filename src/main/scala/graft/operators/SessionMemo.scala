@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one reuse mechanism for expensive per-corpus constructions (the
   * CC closure, k-means centroids, persisted corpus-sized intermediates,
-  * fixture files). Three rules:
+  * fixture files, each table file's inferred schema). Three rules:
   *
   *  1. **Key = (session, dir, content).** An entry is reused only by the
   *     session that built it, for the same corpus dir, while the dir's

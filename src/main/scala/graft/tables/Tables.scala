@@ -2,7 +2,9 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+
+import graft.operators.SessionMemo
 
 /** Loaders for the driver corpus (`TESTDATA.md`): one parquet per table under
   * `/root/testdata/sf{0.001,0.01,0.1}/`. Column pruning + predicate pushdown
@@ -13,8 +15,20 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+  private val schemas = new SessionMemo[StructType]()
+
+  /** `dir`'s `table` read with its schema given: a bare
+    * `spark.read.parquet` launches a one-task job that reads the footer
+    * to infer the schema, on every read. The inferred schema is
+    * memoized per (session, file, content), so each file is inferred
+    * once and a file rewritten at the same path is inferred again.
+    */
+  def load(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    spark.read.schema(
+      schemas.getOrElseUpdate(spark, path)(spark.read.parquet(path).schema))
+      .parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

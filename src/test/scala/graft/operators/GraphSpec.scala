@@ -172,12 +172,13 @@ class GraphSpec extends SparkSpec with Matchers {
     got shouldBe want
   }
 
-  test("q_kcore: the census rides the round checkpoints — at most 2 " +
-    "construction jobs per round after a 5-job prefix") {
-    // a round is one aggregation and its checkpoint, two jobs under AQE;
-    // the census adds none of its own
+  test("q_kcore: the census rides the round checkpoints — one " +
+    "construction job per round plus at most 3") {
+    // a round is one aggregation under a lazy checkpoint: its map stage
+    // is the round's only job; the adjacency build and the closing write
+    // add one each, and the census adds none of its own
     val (_, jobs) = jobsDuring(Graph.qKcore(spark, sf()))
-    jobs should be <= 5 + 2 * Graph.KCoreRounds
+    jobs should be <= Graph.KCoreRounds + 3
   }
 
   test("q_lpa: synchronous label propagation equals a driver-side " +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
@@ -8,7 +8,8 @@ import graft.SparkSpec
 
 /** The round-driver contract every fixpoint loop relies on: how many
   * rounds run, when the loop stops, what it reports, and what a round
-  * costs in Spark jobs.
+  * costs in Spark jobs — for the stopping loop (`Iterate.apply`) and the
+  * fixed-round one (`Iterate.rounds`).
   */
 class IterateSpec extends SparkSpec with Matchers {
 
@@ -76,5 +77,61 @@ class IterateSpec extends SparkSpec with Matchers {
         step(s).localCheckpoint()))
     bare should be > rounds
     looped shouldBe bare
+  }
+
+  /** A one-exchange step: the sums of the residue classes mod 7. */
+  private def fold7(df: DataFrame): DataFrame =
+    df.groupBy((col("n") % 7).as("k")).agg(sum(col("n")).as("n"))
+      .select(col("n"))
+
+  test("rounds runs exactly n rounds and returns the materialized last " +
+    "state") {
+    val r = Iterate.rounds(zero, 5)(inc)
+    value(r.state) shouldBe 5L
+    r.metrics shouldBe Seq.fill(5)(Row.empty)
+    // the returned state is the last round's checkpoint, not its lineage
+    r.state.queryExecution.executedPlan.toString should include("Scan ExistingRDD")
+    val folded = Iterate.rounds(spark.range(100).select(col("id").as("n")), 3)(fold7)
+    folded.state.collect().map(_.getLong(0)).sorted shouldBe Seq(750L, 4200L)
+  }
+
+  test("rounds: each round's observed row equals that state's count(), " +
+    "including rounds that empty the state") {
+    val ten = spark.range(10).select(col("id").as("n"))
+    val cases = Seq[(String, DataFrame, DataFrame => DataFrame)](
+      ("one exchange", spark.range(100).select(col("id").as("n")), fold7),
+      // no exchange: the next checkpoint runs no stage that reads the state
+      ("no exchange", ten, df => df.union(df.filter(col("n") % 2 === 0)
+        .select((col("n") + 1L).as("n")))),
+      // shrinks by 3 a round, past empty, behind an exchange
+      ("decay", ten, _.groupBy((col("n") - 3L).as("n")).agg(count(lit(1)))
+        .select(col("n")).filter(col("n") >= 0L)),
+      // statically empty: the optimizer prunes the observed input away
+      ("static empty", zero, _.filter(lit(false))),
+      // an aggregation whose shuffle turns out empty at run time (the
+      // case adaptive execution prunes)
+      ("pruned empty", zero, _.filter(col("n") < 0L).groupBy(col("n"))
+        .agg(max(col("n")).as("m")).select(col("n"))))
+    for ((name, init, step) <- cases) withClue(s"$name: ") {
+      val want = (1 to 5).scanLeft(init)((s, _) => step(s).localCheckpoint())
+        .tail.map(_.count())
+      val got = Iterate.rounds(init, 5, count(lit(1)).as("rows"))(step)
+        .metrics.map(_.getLong(0))
+      got shouldBe want
+    }
+  }
+
+  test("rounds: a one-exchange step costs one job per round plus one " +
+    "closing write, half the eager checkpoint fold") {
+    val init = spark.range(100).select(col("id").as("n"))
+    val rounds = 3
+    val (_, lazily) = jobsDuring(
+      Iterate.rounds(init, rounds, count(lit(1)), sum(col("n")))(fold7))
+    val (_, eagerly) = jobsDuring(
+      (1 to rounds).foldLeft(init.localCheckpoint())((s, _) =>
+        fold7(s).localCheckpoint())
+        .write.format("noop").mode("overwrite").save())
+    lazily shouldBe rounds + 1
+    eagerly shouldBe 2 * rounds + 2
   }
 }

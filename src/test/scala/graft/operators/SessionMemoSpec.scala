@@ -8,6 +8,7 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.tables.Tables
 
 /** The memo contracts: SessionMemo.buildNanos advances by (outermost)
   * thunk evaluation time, once per materialization, and never on a memo
@@ -67,6 +68,13 @@ class SessionMemoSpec extends SparkSpec with Matchers {
     finally walk.close()
   }
 
+  private def deleteTree(root: Path): Unit = {
+    val walk = Files.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+    finally walk.close()
+  }
+
   /** `query` on a copy of sf0.001 (`before`), on the same path after its
     * documents.parquet is rewritten with 50 extra documents (`got`), and
     * on a fresh copy of the rewritten corpus at another path (`want`).
@@ -88,12 +96,7 @@ class SessionMemoSpec extends SparkSpec with Matchers {
       val fresh = tmp.resolve("fresh")
       copyTree(dir, fresh)
       (before, got, rows(query(fresh.toString)))
-    } finally {
-      val walk = Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+    } finally deleteTree(tmp)
   }
 
   Seq[(String, String, String => DataFrame)](
@@ -101,13 +104,34 @@ class SessionMemoSpec extends SparkSpec with Matchers {
     ("the node-count memo", "q_kcore", d => Graph.qKcore(spark, d)),
     ("a PersistedDF", "q_dedup_minhash", d => Dedup.qDedupMinhash(spark, d)),
     ("a fixture", "q_ingest_jsonl",
-      d => graft.sources.Ingest.qIngestJsonl(spark, d))
+      d => graft.sources.Ingest.qIngestJsonl(spark, d)),
+    ("the schema memo", "Tables.load", d => Tables.load(spark, d, "documents"))
   ).foreach { case (kind, name, q) =>
     test(s"a corpus rewritten at the same path rebuilds $kind ($name)") {
       val (before, got, want) = rewritten(q)
       want should not equal before // the rewrite is visible to the query
       got shouldBe want
     }
+  }
+
+  test("Tables.load infers a file's schema once, and again after the file " +
+    "is rewritten with another schema") {
+    val tmp = Files.createTempDirectory("graft-schema-memo")
+    try {
+      val dir = tmp.toString
+      val file = tmp.resolve("t.parquet")
+      spark.range(3).select(col("id").as("a")).write.parquet(file.toString)
+      Tables.load(spark, dir, "t").columns.toSeq shouldBe Seq("a")
+      // a second read of the same file launches no schema job
+      val (_, jobs) = jobsDuring(Tables.load(spark, dir, "t"))
+      jobs shouldBe 0
+      deleteTree(file)
+      spark.range(2).select(col("id").as("b"), lit("x").as("c"))
+        .write.parquet(file.toString)
+      val df = Tables.load(spark, dir, "t")
+      df.columns.toSeq shouldBe Seq("b", "c")
+      rows(df) shouldBe Seq("0|x", "1|x")
+    } finally deleteTree(tmp)
   }
 
   test("componentCache re-persists its frame after clearCache()") {
