@@ -38,6 +38,11 @@ import org.apache.spark.sql.DataFrame
   */
 object Bench {
 
+  /** The smallest corpus: every listed query runs on it once, untimed,
+    * before any timed pass (here and in graft.tools.Rehearse).
+    */
+  private[graft] val WarmupDir = "/root/testdata/sf0.001"
+
   /** Queries whose construction persists an intermediate — rebuilt per
     * pass against a cleared cache (see scaladoc).
     */
@@ -205,7 +210,7 @@ object Bench {
     // JIT + codegen + parquet-footer warmup on the smallest SF so the
     // measured pass times steady-state execution, not first-call overhead.
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").write
+      try SparkEntry.queries(n)(spark, WarmupDir).write
         .format("noop").mode("overwrite").save()
       catch {
         case e: Throwable => System.err.println(s"[bench] $n warm-up failed: $e")

@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType, TimestampType}
+
+import graft.tables.Tables
 
 /** Structured Streaming surface — the unbounded mirror of the batch
   * operators. The reference has no streaming at all (SURVEY §2.2: the
@@ -23,6 +24,18 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   * Scale notes: state is O(open sessions) per user key, partitioned by
   * user_id across executors; watermarks bound it. Sinks are the caller's
   * choice (tests use the memory sink).
+  *
+  * **The registered `q_stream_*` queries drain one way.** Each reads a
+  * file-source stream, events through [[graft.tables.Tables.eventsStream]]
+  * (which owns the events format), and runs it to completion through
+  * [[drain]]: a fresh memory sink, [[withDrainPartitions]], wait with
+  * `processAllAvailable`, then `stop` in a `finally`; the query's batch
+  * rollup then reads the sink table. The `transformWithState` rows wrap
+  * the drain in [[withRocksDbState]]; `q_stream_attribution` drains into
+  * its foreachBatch store instead. A drain that needs a staged landing
+  * directory reads a [[graft.operators.SessionMemo.fixture]] built once
+  * per corpus ([[sentinelEvents]], [[recrawlDocs]]), so repeated calls
+  * write nothing new.
   */
 object Streaming {
 
@@ -522,56 +535,99 @@ object Streaming {
 
   private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Stage a fixture file into a streaming landing directory. Fails LOUDLY
-    * on a directory-style parquet (round-8 advisor): Files.copy of a
-    * directory copies only the empty directory entry, so the file-source
-    * drain would silently produce zero rows and the gate would report a
-    * mysterious hash mismatch instead of this message.
+  /** The one bounded drain (the contract is in the object scaladoc):
+    * start `df` into a fresh memory sink in `mode` under
+    * [[withDrainPartitions]], wait until every available file is
+    * processed, stop, and return the sink table.
     */
-  private def stageFixture(
-      src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+  private def drain(s: SparkSession, mode: String)(
+      df: Dataset[_]): DataFrame = {
+    val name = s"graft_stream_${sinkSeq.incrementAndGet()}"
+    withDrainPartitions(s) {
+      val q = df.writeStream.outputMode(mode).format("memory")
+        .queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    s.table(name)
+  }
+
+  /** `dir`'s `table` file as a stream path: a glob, not the bare file,
+    * because the file stream source requires its base path to be a
+    * directory, and a glob keeps it at `dir`.
+    */
+  private def corpusFile(dir: String, table: String): String =
+    s"$dir/$table.parque*"
+
+  /** All five events columns as a stream from `path`. */
+  private def allEvents(s: SparkSession, path: String): DataFrame =
+    Tables.eventsStream(s, path, "event_id", "ts", "user_id", "event_type",
+      "value")
+
+  /** Copy `dir`'s `table` file into the landing directory `out` as
+    * `batch0.parquet`. Fails LOUDLY on a directory-style parquet:
+    * Files.copy of a directory copies only the empty directory entry, so
+    * the drain would silently produce zero rows and the gate would report
+    * a mysterious hash mismatch instead of this message.
+    */
+  private def copyCorpusFile(dir: String, table: String, out: String): Unit = {
+    val src = java.nio.file.Paths.get(dir, s"$table.parquet")
     require(java.nio.file.Files.isRegularFile(src),
       s"streaming fixture $src is not a single parquet file; staging a " +
         "directory-style parquet would drain empty — point the stream at " +
         "its data files instead")
-    java.nio.file.Files.copy(src, dst)
-    ()
-  }
-
-  /** Stage far-future sentinel event rows into the landing directory
-    * BEFORE the drain starts (r15). The old discipline appended the
-    * sentinel file after a first processAllAvailable, which cost each
-    * sentinel drain FOUR micro-batches (data, watermark-advance, sentinel,
-    * watermark-advance) — every extra batch is a full state-store
-    * open/commit cycle per operator per partition. Staged up front, the
-    * file source takes data + sentinel as ONE batch (begin-watermark 0, so
-    * nothing is late-dropped and no state times out early) and the
-    * trailing watermark-advance batch flushes all state — the SAME
-    * flush path (`noDataMicroBatches`) the final batch of the old
-    * discipline already relied on. Emitted rows are identical: state
-    * content is a pure function of the event rows, and append-mode
-    * emission timing only reorders rows the rollup sorts anyway
-    * (StreamingSpec pins batch ≡ stream under shuffled micro-batches).
-    */
-  private def stageSentinel(
-      s: SparkSession, stage: java.nio.file.Path,
-      rows: Seq[(Long, Long, Long, String, Double)]): Unit = {
-    import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sentinel")
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = {
-      val st = java.nio.file.Files.list(tmp)
-      try st.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      finally st.close()
-    }
-    java.nio.file.Files.move(part, stage.resolve("z_sentinel.parquet"))
+    java.nio.file.Files.copy(src,
+      java.nio.file.Paths.get(out, "batch0.parquet"))
     ()
   }
 
   /** The shared far-future sentinel timestamp (2100-01-01, micros). */
   private val SentinelTsUs = 4102444800L * 1000000L
+
+  /** The events landing directory of the sentinel-flushed drains
+    * ([[qStreamSessions]], [[qStreamTwsSessions]], [[qStreamOuterJoin]]),
+    * a [[graft.operators.SessionMemo.fixture]] staged once per corpus:
+    * the far-future sentinel rows (one per join side, a click and a
+    * purchase of user −1, which the rollups filter out), written by an
+    * overwrite that clears the directory, then a copy of the events file.
+    * A bounded stream never advances its watermark past the data on its
+    * own; staged BEFORE the drain starts, the sentinels ride the ONE data
+    * micro-batch (begin-watermark 0, so nothing is late-dropped and no
+    * state times out early) and the trailing watermark-advance batch
+    * (`noDataMicroBatches`) flushes every open session and unmatched
+    * touch: two micro-batches, each a full state-store open/commit cycle
+    * per operator per partition. The file source skips the write's
+    * `_SUCCESS` and `.crc` files.
+    */
+  private def sentinelEvents(s: SparkSession, dir: String): DataFrame =
+    allEvents(s, graft.operators.SessionMemo.fixture(
+        s, "graft_stream_events", dir) { out =>
+      import s.implicits._
+      Seq((-1L, SentinelTsUs, -1L, "click", 0.0),
+        (-2L, SentinelTsUs, -1L, "purchase", 0.0))
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .coalesce(1).write.mode("overwrite").parquet(out)
+      copyCorpusFile(dir, "events", out)
+    })
+
+  /** The re-crawl landing directory of [[qStreamDedup]] and
+    * [[qStreamDedupWm]], a [[graft.operators.SessionMemo.fixture]] staged
+    * once per corpus: a planted re-crawl (same texts, ids shifted by
+    * [[graft.operators.Dedup.PlantOffset]]) written by an overwrite that
+    * clears the directory, then a copy of the documents file, so every
+    * content fingerprint arrives at least twice.
+    */
+  private def recrawlDocs(s: SparkSession, dir: String): DataFrame = {
+    val stage = graft.operators.SessionMemo.fixture(
+        s, "graft_stream_recrawl", dir) { out =>
+      Tables.documents(s, dir)
+        .select((col("doc_id") + graft.operators.Dedup.PlantOffset)
+          .as("doc_id"), col("text"))
+        .coalesce(1).write.mode("overwrite").parquet(out)
+      copyCorpusFile(dir, "documents", out)
+    }
+    s.readStream.schema("doc_id BIGINT, text STRING")
+      .parquet(s"$stage/*.parquet")
+  }
 
   /** Run a bounded stream drain with a temporarily reduced shuffle
     * partition count. A stream-stream join maintains FOUR state stores
@@ -604,10 +660,8 @@ object Streaming {
 
   /** Registry query under the driver's oracle gate whose execution path is
     * GENUINELY streaming: a file-source `readStream` over the events
-    * parquet (schema-pruned to the two consumed columns — the
-    * TIMESTAMP(NANOS) column is never requested, so the batch loader's
-    * nanosAsLong shim is not needed) drained through [[kmvDistinct]]'s
-    * `mapGroupsWithState` into a memory sink, collapsed to the final
+    * parquet (pruned to the two consumed columns) drained through
+    * [[kmvDistinct]]'s `mapGroupsWithState`, collapsed to the final
     * emission per key. Because the KMV buffer is a commutative-idempotent
     * set fold (StreamingSpec pins batch≡stream under shuffled
     * micro-batches), the drained state must hash-match the DuckDB oracle
@@ -617,95 +671,55 @@ object Streaming {
     * at 100 TB the same plan tails a landing directory micro-batch by
     * micro-batch with ≤ k longs of state per key.
     */
-  def qStreamKmv(s: SparkSession, dir: String): DataFrame = {
-    val kmvK = graft.operators.Events.KmvK
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("user_id", LongType)))
-    // glob, not bare file path: the file stream source requires its
-    // basePath to be a directory, and a glob keeps it at $dir
-    val src = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
-    val name = s"graft_stream_kmv_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-      val q = kmvDistinct(src, kmvK)
-        .writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+  def qStreamKmv(s: SparkSession, dir: String): DataFrame =
     // update mode re-emits changed keys; the sketch only grows, so the
     // per-key max(struct) IS the final drained state (StreamingSpec's
     // collapse)
-    s.table(name)
+    drain(s, "update")(kmvDistinct(
+        Tables.eventsStream(s, corpusFile(dir, "events"),
+          "event_type", "user_id"),
+        graft.operators.Events.KmvK))
       .groupBy(col("event_type"))
       .agg(max(struct(col("kmv_size"), col("est"))).as("s"))
       .select(col("event_type"), col("s.kmv_size").as("kmv_size"),
         col("s.est").as("est"))
       .orderBy(col("event_type"))
-  }
 
   /** Second streaming query under the driver's oracle gate, this one
     * through the APPEND-mode stateful path ([[sessionize]]'s
     * `flatMapGroupsWithState` + event-time timeout) rather than
-    * [[qStreamKmv]]'s update-mode fold: a file-source stream over a
-    * staged landing directory — the real events file plus one far-future
-    * sentinel row staged as a second file BEFORE the drain starts
-    * ([[stageSentinel]]), so the pair drains as ONE data micro-batch and
-    * the trailing watermark-advance batch flushes the open state (a
-    * bounded stream never times out state on its own because no further
-    * micro-batch fires; the sentinel is what advances the watermark). Values are mapped to integer cents BEFORE the
-    * fold so [[absorb]]'s double accumulation is exact on whole numbers
-    * and the emitted sums match the DECIMAL oracle bit-for-bit,
-    * order-independently. At 100 TB the same plan tails a landing
-    * directory micro-batch by micro-batch with O(open sessions) state
-    * per user; the sentinel is what a production feed's advancing event
-    * time provides for free.
+    * [[qStreamKmv]]'s update-mode fold: a file-source stream over the
+    * staged [[sentinelEvents]] landing directory, whose sentinel advances
+    * the watermark so the drain flushes every open session. Values are
+    * mapped to integer cents BEFORE the fold so [[absorb]]'s double
+    * accumulation is exact on whole numbers and the emitted sums match the
+    * DECIMAL oracle bit-for-bit, order-independently. At 100 TB the same
+    * plan tails a landing directory micro-batch by micro-batch with
+    * O(open sessions) state per user; the sentinel is what a production
+    * feed's advancing event time provides for free.
     */
-  def qStreamSessions(s: SparkSession, dir: String): DataFrame = {
+  def qStreamSessions(s: SparkSession, dir: String): DataFrame =
+    realSessions(drain(s, "append")(sessionize(centEvents(s, dir),
+      gapMinutes = graft.operators.Events.SessionGapMinutes,
+      watermark = "0 seconds")))
+
+  /** [[sentinelEvents]] as [[Event]]s with values in integer cents. */
+  private def centEvents(s: SparkSession, dir: String): Dataset[Event] = {
     import s.implicits._
-    // same session-level parquet/timezone posture as Tables.events — the
-    // stream schema reads the TIMESTAMP(NANOS) column as raw longs
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (s.conf.get("spark.sql.session.timeZone") != "UTC")
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-    val stage = java.nio.file.Files.createTempDirectory("graft_sess_stream")
-    stageFixture(
-      java.nio.file.Paths.get(dir, "events.parquet"),
-      stage.resolve("batch0.parquet"))
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val src = s.readStream.schema(schema).parquet(stage.toString)
-      // the streaming parquet reader delivers the TIMESTAMP(NANOS)
-      // column as MICROSECOND longs under the declared LongType schema
-      // (truncating ns -> us exactly like the batch loader's DIV 1000;
-      // verified value-identical against the batch path at the gate SF)
-      .withColumn("ts", timestamp_micros(col("ts")))
+    sentinelEvents(s, dir)
       .withColumn("value", round(col("value") * 100, 0))
       .as[Event]
-    // sentinel staged BEFORE start ([[stageSentinel]]): one far-future
-    // row rides the data batch; the trailing watermark-advance batch
-    // closes every real session — 2 micro-batches instead of 4
-    stageSentinel(s, stage, Seq((-1L, SentinelTsUs, -1L, "x", 0.0)))
-    val name = s"graft_stream_sess_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-    val q = sessionize(src,
-      gapMinutes = graft.operators.Events.SessionGapMinutes,
-      watermark = "0 seconds")
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).filter(col("user_id") >= 0)
+  }
+
+  /** A drained sessionizer sink without the sentinel user's session,
+    * values back in currency units.
+    */
+  private def realSessions(drained: DataFrame): DataFrame =
+    drained.filter(col("user_id") >= 0)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"),
         (col("session_value") / 100.0).as("session_value"))
       .orderBy(col("user_id"), col("session_start"))
-  }
 
   /** The REFERENCE's workload as a structured stream under the gate:
     * word count (`wc.go:14-38` semantics — the [[wordCount]] expression
@@ -717,21 +731,13 @@ object Streaming {
     * `wc_wordcount` row: one tokenizer definition, one oracle, three
     * execution regimes (sequential-parity MRJob, batch SQL, stream).
     */
-  def qStreamWc(s: SparkSession, dir: String): DataFrame = {
-    val schema = StructType(Seq(StructField("text", StringType)))
-    val src = s.readStream.schema(schema).parquet(s"$dir/documents.parque*")
-    val name = s"graft_stream_wc_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-      val q = wordCount(src, "text")
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+  def qStreamWc(s: SparkSession, dir: String): DataFrame =
+    drain(s, "update")(wordCount(
+        s.readStream.schema("text STRING")
+          .parquet(corpusFile(dir, "documents")), "text"))
       .groupBy(col("word"))
       .agg(max(col("cnt")).as("cnt"))
       .orderBy(col("word"))
-  }
 
   /** The FLAGSHIP relational query as a structured stream under the gate:
     * the TPC-H Q1 pricing summary ([[graft.operators.Relational.q1Agg]])
@@ -748,22 +754,16 @@ object Streaming {
     * — TpcHSqlSpec —, multi-JVM, stream), mirroring wc's three.
     */
   def qStreamQ1(s: SparkSession, dir: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("l_returnflag", StringType),
-      StructField("l_linestatus", StringType),
-      StructField("l_quantity", DoubleType),
-      StructField("l_extendedprice", DoubleType),
-      StructField("l_discount", DoubleType),
-      StructField("l_tax", DoubleType),
-      StructField("l_shipdate", TimestampType)))
-    val src = s.readStream.schema(schema).parquet(s"$dir/lineitem.parque*")
+    val src = s.readStream
+      .schema("l_returnflag STRING, l_linestatus STRING, l_quantity DOUBLE, " +
+        "l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+        "l_shipdate TIMESTAMP")
+      .parquet(corpusFile(dir, "lineitem"))
     import graft.operators.Relational.cents
     val epC = cents(col("l_extendedprice"))
     val d100 = lit(100L) - cents(col("l_discount"))
     val t100 = lit(100L) + cents(col("l_tax"))
-    val name = s"graft_stream_q1_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-      val q = src
+    drain(s, "update")(src
         .filter(col("l_shipdate") <= lit("1999-12-31").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -771,12 +771,7 @@ object Streaming {
           sum(epC.cast("decimal(38,0)")).as("base_c"),
           sum((epC * d100).cast("decimal(38,0)")).as("disc_cbp"),
           sum((epC * d100 * t100).cast("decimal(38,0)")).as("charge_cbp2"),
-          count(lit(1)).as("count_order"))
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+          count(lit(1)).as("count_order")))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(max(col("qty_c")).as("qty_c"), max(col("base_c")).as("base_c"),
         max(col("disc_cbp")).as("disc_cbp"),
@@ -799,31 +794,18 @@ object Streaming {
     * streaming state store (state size fixed by the declared id DOMAIN —
     * 16 KiB per segment — regardless of how many rows stream through),
     * and the drained per-batch cardinalities collapse by max (cardinality
-    * only grows). The schema reads ONLY (event_type, user_id), so the
-    * fixture's timestamp physical-annotation drift never enters this
-    * stream. Same oracle class as the batch `q_bitmap_segments` counts:
-    * exact COUNT(DISTINCT) per segment.
+    * only grows). Same oracle class as the batch `q_bitmap_segments`
+    * counts: exact COUNT(DISTINCT) per segment.
     */
-  def qStreamBitmap(s: SparkSession, dir: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("user_id", LongType)))
-    val src = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
-    val name = s"graft_stream_bitmap_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-      val q = src
+  def qStreamBitmap(s: SparkSession, dir: String): DataFrame =
+    drain(s, "update")(
+      Tables.eventsStream(s, corpusFile(dir, "events"), "event_type", "user_id")
         .groupBy(col("event_type"))
         .agg(graft.functions.Bitmaps.bitmapCard(
-          graft.functions.Bitmaps.bitmapAgg(col("user_id"))).as("n_users"))
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+          graft.functions.Bitmaps.bitmapAgg(col("user_id"))).as("n_users")))
       .groupBy(col("event_type"))
       .agg(max(col("n_users")).as("n_users"))
       .orderBy(col("event_type"))
-  }
 
   /** Spend threshold (integer cents) splitting the user tiers of
     * [[userSegments]] — chosen near the median per-user purchase spend so
@@ -837,7 +819,7 @@ object Streaming {
     * refreshed dimension a streaming enrichment broadcasts.
     */
   private[streaming] def userSegments(s: SparkSession, dir: String): DataFrame =
-    graft.tables.Tables.events(s, dir)
+    Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
       .agg(sum(graft.operators.Relational.cents(col("value"))).as("spend_c"))
@@ -847,12 +829,10 @@ object Streaming {
 
   /** Streaming EXACT dedup drained under the gate — the incremental
     * counterpart of [[graft.operators.Dedup.qDedupExact]]'s fingerprint
-    * groupBy, run as a landing-directory re-crawl: the real documents
-    * file is staged as arrival 0 and a planted re-crawl (same texts,
-    * ids shifted by [[graft.operators.Dedup.PlantOffset]]) is written
-    * beside it, so every content fingerprint is seen at least twice.
-    * The streaming aggregate per md5(text) keeps (keeper = min doc_id,
-    * cnt = count) in update mode; both components only TIGHTEN (keeper
+    * groupBy, run over the [[recrawlDocs]] landing directory, where
+    * every content fingerprint arrives at least twice. The streaming
+    * aggregate per md5(text) keeps (keeper = min doc_id, cnt = count) in
+    * update mode; both components only TIGHTEN (keeper
     * never rises, cnt never falls), so the per-key collapse of the
     * update sink's emission history IS the drained final state — the
     * qStreamKmv monotone-fold discipline. The reported duplicate-size
@@ -861,35 +841,16 @@ object Streaming {
     * tails a crawl landing directory with O(distinct fingerprints)
     * state — the incremental dedup a recrawling pipeline actually runs.
     */
-  def qStreamDedup(s: SparkSession, dir: String): DataFrame = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_dedup_stream")
-    stageFixture(
-      java.nio.file.Paths.get(dir, "documents.parquet"),
-      stage.resolve("batch0.parquet"))
-    graft.tables.Tables.documents(s, dir)
-      .select((col("doc_id") + graft.operators.Dedup.PlantOffset)
-        .as("doc_id"), col("text"))
-      .coalesce(1).write.mode("append").parquet(stage.toString)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val src = s.readStream.schema(schema).parquet(s"$stage/*.parquet")
-    val name = s"graft_stream_dedup_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-      val q = src
+  def qStreamDedup(s: SparkSession, dir: String): DataFrame =
+    drain(s, "update")(recrawlDocs(s, dir)
         .select(md5(col("text")).as("fp"), col("doc_id"))
         .groupBy(col("fp"))
-        .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("cnt"))
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+        .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("cnt")))
       .groupBy(col("fp"))
       .agg(min(col("keeper")).as("keeper"), max(col("cnt")).as("cnt"))
       .groupBy(col("cnt").as("dup_count"))
       .agg(count(lit(1)).as("n_groups"), sum(col("keeper")).as("keep_id_sum"))
       .orderBy(col("dup_count"))
-  }
 
   /** Spark's NATIVE streaming-dedup primitive under the gate —
     * `dropDuplicatesWithinWatermark`, the engine-managed counterpart of
@@ -899,11 +860,11 @@ object Streaming {
     * the watermark delay are dropped by the state store, and state
     * expires once the watermark passes — the bounded-memory contract that
     * makes streaming dedup deployable against an unbounded crawl. The
-    * same re-crawled landing directory as [[qStreamDedup]] (every
-    * fingerprint arrives at least twice) drains with a constant event
-    * time, so no state expires mid-drain and the emitted set must be
-    * EXACTLY one row per distinct fingerprint: the output census carries
-    * n_keys, n_multi (fingerprints emitted more than once — the oracle
+    * same [[recrawlDocs]] landing directory as [[qStreamDedup]] drains
+    * with a constant event time, so no state expires mid-drain and the
+    * emitted set must be EXACTLY one row per distinct fingerprint: the
+    * output census carries n_keys, n_multi (fingerprints emitted more
+    * than once — the oracle
     * pins it to 0, so a double emission is a hash mismatch, not a
     * warning), and a 60-bit-prefix checksum over the emitted fingerprint
     * VALUES (a census that counted the wrong keys also mismatches).
@@ -911,38 +872,19 @@ object Streaming {
     * O(distinct keys inside the horizon), expired by the engine instead
     * of by [[IncrementalDedup]]'s explicit retention buckets.
     */
-  def qStreamDedupWm(s: SparkSession, dir: String): DataFrame = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_dedupwm_stream")
-    stageFixture(
-      java.nio.file.Paths.get(dir, "documents.parquet"),
-      stage.resolve("batch0.parquet"))
-    graft.tables.Tables.documents(s, dir)
-      .select((col("doc_id") + graft.operators.Dedup.PlantOffset)
-        .as("doc_id"), col("text"))
-      .coalesce(1).write.mode("append").parquet(stage.toString)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val src = s.readStream.schema(schema).parquet(s"$stage/*.parquet")
-    val name = s"graft_stream_dedupwm_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-      val q = src
+  def qStreamDedupWm(s: SparkSession, dir: String): DataFrame =
+    drain(s, "append")(recrawlDocs(s, dir)
         .select(md5(col("text")).as("fp"),
           lit("2026-01-01 00:00:00").cast("timestamp").as("ts"))
         .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("fp")
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val perFp = s.table(name)
+        .dropDuplicatesWithinWatermark("fp"))
       .groupBy(col("fp"))
       .agg(count(lit(1)).as("emits"))
-    perFp.agg(
-      count(lit(1)).as("n_keys"),
-      sum(when(col("emits") > 1L, 1L).otherwise(0L)).as("n_multi"),
-      sum(conv(substring(col("fp"), 1, 15), 16, 10).cast("long") % 9973L)
-        .as("fp_chk"))
-  }
+      .agg(
+        count(lit(1)).as("n_keys"),
+        sum(when(col("emits") > 1L, 1L).otherwise(0L)).as("n_multi"),
+        sum(conv(substring(col("fp"), 1, 15), 16, 10).cast("long") % 9973L)
+          .as("fp_chk"))
 
   /** The foreachBatch keyed-upsert SINK regime under the oracle gate —
     * the one core streaming pattern the other gate rows don't touch: a
@@ -960,20 +902,11 @@ object Streaming {
     * one row per attributed purchase, merged idempotently.
     */
   def qStreamAttribution(s: SparkSession, dir: String): DataFrame = {
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (s.conf.get("spark.sql.session.timeZone") != "UTC")
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val src = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
-      .withColumn("ts", timestamp_micros(col("ts")))
     val store = new DistributedAttributionStore(s)
     val days = graft.operators.Events.AttrWindowDays
     withDrainPartitions(s) {
-      val q = attributionLatestDistributed(src, store,
+      val q = attributionLatestDistributed(
+        allEvents(s, corpusFile(dir, "events")), store,
         watermark = "1 hour", attributionWindow = s"$days days")
       try q.processAllAvailable() finally q.stop()
     }
@@ -1044,26 +977,18 @@ object Streaming {
     */
   def qStreamTwsMap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("user_id", LongType)))
-    val src = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
+    val src = Tables.eventsStream(s, corpusFile(dir, "events"),
+        "event_type", "user_id")
       .select(col("user_id"), col("event_type")).as[(Long, String)]
       .groupByKey(_._1)
       .transformWithState(new ChannelMixProcessor,
         TimeMode.None(), OutputMode.Update())
-    val name = s"graft_stream_tws_map_${sinkSeq.incrementAndGet()}"
-    withRocksDbState(s) { withDrainPartitions(s) {
-      val q = src.writeStream.outputMode("update").format("memory")
-        .queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } }
     // tier via a user-partitioned window over the per-(user, channel)
     // frame (≤ |event types| rows per user) — a self-join of the memory
     // sink view would collide on its fixed attribute ids
     val byUser = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
-    s.table(name)
+    withRocksDbState(s)(drain(s, "update")(src))
       .groupBy(col("user_id"), col("channel"))
       .agg(max(col("cnt")).as("cnt"))
       .withColumn("n_total", sum(col("cnt")).over(byUser))
@@ -1186,8 +1111,8 @@ object Streaming {
   }
 
   /** The gap sessionizer re-run on transformWithState (ListState +
-    * event-time timers, RocksDB provider) over the same staged landing
-    * directory and sentinel discipline as [[qStreamSessions]] — and
+    * event-time timers, RocksDB provider) over the same
+    * [[sentinelEvents]] landing directory as [[qStreamSessions]] — and
     * against the SAME oracle: three execution regimes for one session
     * derivation (batch window walk, flatMapGroupsWithState, modern
     * arbitrary state). At 100 TB the ListState rows live in RocksDB
@@ -1195,41 +1120,12 @@ object Streaming {
     */
   def qStreamTwsSessions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (s.conf.get("spark.sql.session.timeZone") != "UTC")
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-    val stage = java.nio.file.Files.createTempDirectory("graft_tws_sess")
-    stageFixture(
-      java.nio.file.Paths.get(dir, "events.parquet"),
-      stage.resolve("batch0.parquet"))
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val src = s.readStream.schema(schema).parquet(stage.toString)
-      .withColumn("ts", timestamp_micros(col("ts")))
-      .withColumn("value", round(col("value") * 100, 0))
-      .as[Event]
+    realSessions(withRocksDbState(s)(drain(s, "append")(centEvents(s, dir)
       .withWatermark("ts", "0 seconds")
       .groupByKey(_.user_id)
       .transformWithState(
         new TwsSessionizer(graft.operators.Events.SessionGapMinutes),
-        TimeMode.EventTime(), OutputMode.Append())
-    // sentinel staged BEFORE start ([[stageSentinel]]): 2 micro-batches
-    // instead of 4 — the timer flush rides the watermark-advance batch
-    stageSentinel(s, stage, Seq((-1L, SentinelTsUs, -1L, "x", 0.0)))
-    val name = s"graft_stream_tws_sess_${sinkSeq.incrementAndGet()}"
-    withRocksDbState(s) { withDrainPartitions(s) {
-      val q = src.writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } }
-    s.table(name).filter(col("user_id") >= 0)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"),
-        (col("session_value") / 100.0).as("session_value"))
-      .orderBy(col("user_id"), col("session_start"))
+        TimeMode.EventTime(), OutputMode.Append()))))
   }
 
   /** [[SpendProcessor]] with a BATCH-SEEDED warm start
@@ -1286,7 +1182,7 @@ object Streaming {
     */
   def qStreamTwsSeeded(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val snapshot = graft.tables.Tables.events(s, dir)
+    val snapshot = Tables.events(s, dir)
       .filter(col("event_type") === "purchase" && inSeedSnapshot)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
@@ -1294,13 +1190,8 @@ object Streaming {
       .select(col("user_id"), col("n"), col("c"))
       .as[(Long, Long, Long)]
     val initial = snapshot.groupByKey(_._1).mapValues(r => (r._2, r._3))
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", LongType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val src = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
+    val src = Tables.eventsStream(s, corpusFile(dir, "events"),
+        "event_id", "user_id", "event_type", "value")
       .filter(col("event_type") === "purchase" && !inSeedSnapshot)
       .select(col("user_id"),
         graft.operators.Relational.cents(col("value")).as("cents"))
@@ -1308,13 +1199,7 @@ object Streaming {
       .groupByKey(_._1)
       .transformWithState(new SeededSpendProcessor,
         TimeMode.None(), OutputMode.Update(), initial)
-    val name = s"graft_stream_tws_seed_${sinkSeq.incrementAndGet()}"
-    withRocksDbState(s) { withDrainPartitions(s) {
-      val q = src.writeStream.outputMode("update").format("memory")
-        .queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } }
-    val emitted = s.table(name)
+    val emitted = withRocksDbState(s)(drain(s, "update")(src))
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_purchases"), col("cents"))).as("st"))
       .select(col("user_id"), col("st.n_purchases").as("n"),
@@ -1340,13 +1225,8 @@ object Streaming {
     */
   def qStreamTws(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("user_id", LongType),
-      StructField("value", DoubleType)))
-    val src = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
-    val name = s"graft_stream_tws_${sinkSeq.incrementAndGet()}"
-    val out = src
+    val src = Tables.eventsStream(s, corpusFile(dir, "events"),
+        "event_type", "user_id", "value")
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
         graft.operators.Relational.cents(col("value")).as("cents"))
@@ -1354,15 +1234,7 @@ object Streaming {
       .groupByKey(_._1)
       .transformWithState(new SpendProcessor,
         TimeMode.None(), OutputMode.Update())
-    withRocksDbState(s) { withDrainPartitions(s) {
-      val q = out.writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } }
-    s.table(name)
+    withRocksDbState(s)(drain(s, "update")(src))
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_purchases"), col("cents"))).as("st"))
       .select(col("st.n_purchases").as("n_purchases"),
@@ -1379,40 +1251,21 @@ object Streaming {
     * as a file-source stream, each event is tagged with its user's
     * spend-tier segment from the batch-derived [[userSegments]] dimension
     * (absent users → 'unknown' through the left-outer coalesce), drained
-    * append-mode into a memory sink, and the drained rows are rolled up to
+    * in append mode, and the drained rows are rolled up to
     * a (segment, event_type) traffic/revenue matrix in exact integer
     * cents. The DuckDB oracle recomputes the same enrichment as a batch
     * LEFT JOIN — the stream-static join must be row-for-row the batch
     * join. At 100 TB the same plan tails a landing directory with ZERO
     * stream-side shuffle: the dimension broadcasts, the stream maps.
     */
-  def qStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    // same TIMESTAMP(NANOS) posture as qStreamSessions: declare ts LongType
-    // (micros under nanosAsLong) and rebuild the timestamp column
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (s.conf.get("spark.sql.session.timeZone") != "UTC")
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val src = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
-      .withColumn("ts", timestamp_micros(col("ts")))
-    val name = s"graft_stream_join_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-      val q = enrichWithSegments(src, userSegments(s, dir))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+  def qStreamJoin(s: SparkSession, dir: String): DataFrame =
+    drain(s, "append")(enrichWithSegments(
+        allEvents(s, corpusFile(dir, "events")), userSegments(s, dir)))
       .groupBy(col("segment"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(graft.operators.Relational.cents(col("value")))
           .as("value_cents"))
       .orderBy(col("segment"), col("event_type"))
-  }
 
   /** Fifth streaming query under the gate and the LAST core join regime:
     * a watermarked STREAM-STREAM inner join with an event-time range
@@ -1430,16 +1283,7 @@ object Streaming {
     * exact cents.
     */
   def qStreamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (s.conf.get("spark.sql.session.timeZone") != "UTC")
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    def src() = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
-      .withColumn("ts", timestamp_micros(col("ts")))
+    def src() = allEvents(s, corpusFile(dir, "events"))
     val days = graft.operators.Events.AttrWindowDays
     val touches = src()
       .filter(col("event_type")
@@ -1457,13 +1301,7 @@ object Streaming {
       col("user_id") === col("p_user") &&
         col("ts_t") <= col("ts_p") &&
         col("ts_t") > col("ts_p") - expr(s"INTERVAL $days DAYS"))
-    val name = s"graft_stream_ssj_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) {
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(s, "append")(joined)
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("purchase_id")).as("n_purchases"),
@@ -1477,33 +1315,19 @@ object Streaming {
     * touch can only emit its null-extended row once the watermark PROVES
     * no matching purchase can still arrive (ts_t + lookback behind the
     * purchase-side watermark). A bounded replay never advances the
-    * watermark past the data on its own, so the drain uses the
-    * [[qStreamSessions]] sentinel discipline — the real events file plus
-    * one far-future row PER SIDE (a click and a purchase, user −1)
-    * staged before start, so the pair of event-time watermarks passes
-    * every real row after the single data batch and the trailing
-    * watermark-advance batch flushes the outer state. The drained rollup — matched pairs plus
+    * watermark past the data on its own, so the drain reads the
+    * [[sentinelEvents]] landing directory, whose one far-future row PER
+    * SIDE moves both event-time watermarks past every real row, and the
+    * trailing watermark-advance batch flushes the outer state (the two
+    * sentinels match EACH OTHER; the rollup filters user −1). The
+    * drained rollup — matched pairs plus
     * per-channel unmatched-touch counts — must equal the batch LEFT
     * JOIN from the same pairing CTE. At 100 TB the sentinel is what a
     * live feed's advancing event time provides continuously; state
     * stays bounded by the lookback on both sides.
     */
   def qStreamOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (s.conf.get("spark.sql.session.timeZone") != "UTC")
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-    val stage = java.nio.file.Files.createTempDirectory("graft_ssoj_stream")
-    stageFixture(
-      java.nio.file.Paths.get(dir, "events.parquet"),
-      stage.resolve("batch0.parquet"))
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val src = s.readStream.schema(schema).parquet(stage.toString)
-      .withColumn("ts", timestamp_micros(col("ts")))
+    val src = sentinelEvents(s, dir)
     val days = graft.operators.Events.AttrWindowDays
     val touches = src
       .filter(col("event_type")
@@ -1523,21 +1347,7 @@ object Streaming {
         col("ts_t") <= col("ts_p") &&
         col("ts_t") > col("ts_p") - expr(s"INTERVAL $days DAYS"),
       "left_outer")
-    // one far-future row per side, staged BEFORE start ([[stageSentinel]]):
-    // both watermarks advance past the data after the single data batch,
-    // and the watermark-advance batch flushes the unmatched-touch state —
-    // 2 micro-batches instead of 4. The two sentinels match EACH OTHER
-    // (user −1, equal ts) exactly as they did arriving together in the
-    // old sentinel batch; the rollup filters user −1 either way.
-    stageSentinel(s, stage, Seq(
-      (-1L, SentinelTsUs, -1L, "click", 0.0),
-      (-2L, SentinelTsUs, -1L, "purchase", 0.0)))
-    val name = s"graft_stream_ssoj_${sinkSeq.incrementAndGet()}"
-    withDrainPartitions(s) { val q = joined.writeStream
-      .outputMode("append").format("memory")
-      .queryName(name).start()
-    try q.processAllAvailable() finally q.stop() }
-    s.table(name).filter(col("user_id") >= 0)
+    drain(s, "append")(joined).filter(col("user_id") >= 0)
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_rows"),
         count(col("purchase_id")).as("n_matched"),

@@ -936,4 +936,43 @@ class StreamingSpec extends SparkSpec with Matchers {
     want should not be empty
     got shouldBe want
   }
+
+  test("Tables.eventsStream drains to exactly Tables.events, ts included, " +
+    "and a pruned read declares only its columns") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
+    val path = s"${sf()}/events.parque*"
+    val q = graft.tables.Tables.eventsStream(spark, path, cols: _*)
+      .writeStream.format("memory").queryName("events_stream_t").start()
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.table("events_stream_t")
+    val want = graft.tables.Tables.events(spark, sf()).select(cols.map(col): _*)
+    got.schema.map(f => f.name -> f.dataType) shouldBe
+      want.schema.map(f => f.name -> f.dataType)
+    val wantRows = want.collect().sortBy(_.getLong(0)).toSeq
+    wantRows should not be empty
+    got.collect().sortBy(_.getLong(0)).toSeq shouldBe wantRows
+    graft.tables.Tables.eventsStream(spark, path, "event_type", "user_id")
+      .schema.map(f => f.name -> f.dataType) shouldBe
+      Seq("event_type" -> StringType, "user_id" -> LongType)
+  }
+
+  test("the staged drains leave nothing new in the JVM temp dir outside " +
+    "their fixture families, however often they run") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries(): Set[String] = tmp.list().toSet
+    // the session's own dirs and the native libraries the drains load
+    // (snappy for parquet, lz4 for the shuffle, RocksDB for state) land
+    // in the temp dir once per JVM: start them all before the snapshot
+    graft.tables.Tables.events(spark, sf())
+      .groupBy(col("user_id")).count().collect()
+    org.rocksdb.RocksDB.loadLibrary()
+    val before = entries()
+    for (_ <- 1 to 2) Seq(Streaming.qStreamSessions _,
+      Streaming.qStreamTwsSessions _, Streaming.qStreamOuterJoin _,
+      Streaming.qStreamDedup _, Streaming.qStreamDedupWm _)
+      .foreach(q => q(spark, sf()).collect())
+    val families = Set("graft_stream_events", "graft_stream_recrawl")
+    entries() -- before -- families shouldBe empty
+  }
 }
